@@ -24,7 +24,8 @@ Semantics preserved from the reference:
 Scale: a spec compiles to projections + generators only — no shuffle,
 no Python. Normalizing 100 TB of documents is one map-only pass per
 output table (share the scan via ``cache()`` or ``foreachBatch``; see
-``sinks.write_all``).
+``pipeline.run_batch_pipeline`` and
+``streaming.ingest.foreach_batch_normalize``).
 """
 
 from __future__ import annotations

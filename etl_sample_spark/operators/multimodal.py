@@ -905,8 +905,8 @@ def _encode_jpeg_numpy(
     (Python ``round`` on a float and ``np.rint`` are both IEEE
     roundTiesToEven). The entropy coder is the SAME code
     (:func:`_emit_quant_block`), fed the same ints. Pinned by
-    tests/test_multimodal_twins.py over dims × gray/color × qtables ×
-    restart intervals."""
+    tests/test_operators.py::test_jpeg_encoder_twins_bit_identical_and_env_selectable
+    over dims × gray/color × qtables × restart intervals."""
     import numpy as np
 
     qt_zz = qtable or [8] * 64
@@ -3296,7 +3296,8 @@ def _encode_ipdv_numpy(width: int, height: int, frames: list[bytes], gop: int = 
     P-frame equals the source frame identically ((p + (cur-p) mod 256)
     mod 256 == cur — the pure path's own "== cur" invariant), so
     ``prev`` advances to ``cur`` without materializing recon. Pinned by
-    tests/test_multimodal_twins.py across dims × frame-counts × gops."""
+    tests/test_operators.py::test_ipdv_encoder_twins_bit_identical_and_env_selectable
+    across dims × frame-counts × gops."""
     import struct
 
     import numpy as np

@@ -531,8 +531,13 @@ def pq_assign_codes(
     v = F.col(vec_col).cast("array<double>")
     m = len(codebooks)
     ds = len(codebooks[0][0])
-    if "__pq_cb" in embeddings.columns:
-        raise ValueError("pq_assign_codes reserved column __pq_cb already on embeddings")
+    # The output adds these names next to every input column; a clash
+    # would leave two same-named columns and an ambiguous reference.
+    reserved = ["__pq_cb", *(f"__code{j}" for j in range(m))]
+    taken = {c.lower() for c in embeddings.columns}
+    clash = [c for c in reserved if c.lower() in taken]
+    if clash:
+        raise ValueError(f"pq_assign_codes reserved columns already on embeddings: {clash}")
     # The codebook rides in the DATA plane — a one-row broadcast frame
     # holding the m×ksub×ds nested array — instead of m nested array
     # LITERALS (r17; the r8 form had already collapsed ksub folds into

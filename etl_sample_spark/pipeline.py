@@ -7,7 +7,8 @@ Batch one-shot: ``run_batch_pipeline`` routes every ``*.json`` under a
 directory to its form (same dispatch order as the reference :798-805),
 parses with the form's explicit schema, quarantines malformed documents
 instead of swallowing them, normalizes into the reference's exact star
-schema, and appends to parquet and/or a JDBC database. Continuous:
+schema, and appends to parquet and/or a JDBC database, counting each
+table's rows during its write rather than in a job of its own. Continuous:
 ``streaming.ingest`` is the exactly-once replacement for the loop —
 this module is the "run it once over a folder" entry a reference user
 reaches for first.
@@ -24,7 +25,8 @@ import glob
 import os
 import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from etl_sample_spark import schemas
 from etl_sample_spark.forms import (
@@ -97,14 +99,23 @@ def run_batch_pipeline(
 
     Sinks are additive: pass ``parquet_out`` for a parquet star schema
     (``<out>/<table>``), ``jdbc_url`` for the reference's database sink,
-    either, or both (the normalized tables are computed once and fanned
-    out). Malformed documents go to ``dead_letter_dir`` as raw text for
-    replay — the reference's bare ``try/except`` made them vanish.
-    """
-    from pyspark.sql import functions as F
+    or both (the same frames go to each). At least one is required: the
+    counts are taken during the sink writes, so a call with no sink
+    would have nothing to count. Malformed documents go to
+    ``dead_letter_dir`` as raw text for replay — the reference's bare
+    ``try/except`` made them vanish.
 
+    Counts cost no extra job: every normalized table and every form's
+    quarantine frame carries a ``df.observe`` row count that its first
+    write fills in, so a call runs one job per table write and one per
+    dead-letter write. A later write of the same observed frame (the
+    JDBC leg after parquet) recomputes it from the raw-parse cache and
+    leaves the first count in place.
+    """
     from etl_sample_spark.sources.sinks import write_jdbc_tables
 
+    if parquet_out is None and jdbc_url is None:
+        raise ValueError("run_batch_pipeline needs a sink: pass parquet_out, jdbc_url or both")
     routed = route_files(in_dir, spark)
     counts: dict[str, int] = {}
     n_quarantined = 0
@@ -116,32 +127,32 @@ def run_batch_pipeline(
         clean, corrupt = quarantine_corrupt(raw)
         try:
             if dead_letter_dir is not None:
-                corrupt = corrupt.withColumn("form", F.lit(form))
+                corrupt, obs = _observe_rows(corrupt.withColumn("form", F.lit(form)))
                 corrupt.write.mode("append").parquet(dead_letter_dir)
-                n_quarantined += corrupt.count()  # this run's rows (source is cached)
-            tables = normalize(clean, specs_fn())
-            # Each table's plan runs up to three times (parquet write,
-            # JDBC write, count) from the cached RAW parse; caching the
-            # narrow normalized output shares the explode/projection
-            # work across the fan-out (r11 review).
-            for table in tables.values():
-                table.cache()
-            try:
-                if parquet_out is not None:
-                    for name, table in tables.items():
-                        table.write.mode("append").parquet(os.path.join(parquet_out, name))
-                if jdbc_url is not None:
-                    write_jdbc_tables(tables, jdbc_url, db_schema, options=jdbc_options)
+                n_quarantined += obs.get["rows"]
+            tables, observations = {}, {}
+            for name, table in normalize(clean, specs_fn()).items():
+                tables[name], observations[name] = _observe_rows(table)
+            if parquet_out is not None:
                 for name, table in tables.items():
-                    counts[name] = counts.get(name, 0) + table.count()
-            finally:
-                for table in tables.values():
-                    table.unpersist()
+                    table.write.mode("append").parquet(os.path.join(parquet_out, name))
+            if jdbc_url is not None:
+                write_jdbc_tables(tables, jdbc_url, db_schema, options=jdbc_options)
+            for name, obs in observations.items():
+                counts[name] = counts.get(name, 0) + obs.get["rows"]
         finally:
-            # quarantine_corrupt cached the raw parse; without this the
-            # per-form corpora pin executor memory for the session
-            # lifetime (r11 review).
+            # quarantine_corrupt cached the raw parse: it shares the one
+            # JSON scan across this form's writes, and Spark needs it to
+            # query the corrupt column. Release it once they are done,
+            # or the per-form corpora pin executor memory for the
+            # session lifetime.
             raw.unpersist()
     if dead_letter_dir is not None:
         counts["__quarantined"] = n_quarantined
     return counts
+
+
+def _observe_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with a row count that its first action fills in."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs

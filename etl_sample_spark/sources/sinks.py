@@ -5,9 +5,11 @@ the reference's duplicate-on-retry gap (at-least-once blob loop + blind
 appends, ``Sample-Json-to-SQL-Full-Pipeline-EO-10-03-2019.py:28,807-816``).
 
 Multi-output single-pass (SURVEY §4): the reference fans one document out
-to 22 sink calls; in Spark each table write is an action, so
-``write_all`` caches the shared document scan once — without it the JSON
-corpus would be re-read per table.
+to 22 sink calls; in Spark each table write is an action, so the callers
+cache the shared document scan once — without it the JSON corpus would
+be re-read per table. ``pipeline.run_batch_pipeline`` caches each form's
+raw parse, and ``streaming.ingest.foreach_batch_normalize`` each
+micro-batch.
 """
 
 from __future__ import annotations

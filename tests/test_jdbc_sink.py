@@ -16,10 +16,10 @@ URL = "jdbc:derby:memory:sinkdb;create=true"
 DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
 
 
-def _read(spark, table):
+def _read(spark, table, url=URL):
     return (
         spark.read.format("jdbc")
-        .option("url", URL)
+        .option("url", url)
         .option("dbtable", table)
         .option("driver", DRIVER)
         .load()
@@ -88,3 +88,24 @@ def test_run_batch_pipeline_jdbc_leg(spark, tmp_path):
     )
     assert back.count() == len(BANK_DOCS) == counts["bank_scrape_info"]
     assert spark.read.parquet(os.path.join(str(tmp_path / "star"), "transactions")).count() > 0
+
+
+def test_run_batch_pipeline_jdbc_only_counts_match_readback(spark, tmp_path):
+    """With the database as the only sink, the counts the pipeline
+    returns are observed on the JDBC writes themselves and equal the
+    rows read back over JDBC, table by table."""
+    from etl_sample_spark.pipeline import run_batch_pipeline
+    from tests.fixtures import BANK_DOCS, COMBINED_DOCS, write_docs
+
+    src = str(tmp_path / "in")
+    write_docs(src, BANK_DOCS)
+    write_docs(src, COMBINED_DOCS)
+    url = "jdbc:derby:memory:pipeonlydb;create=true"
+    counts = run_batch_pipeline(
+        spark, src, parquet_out=None, jdbc_url=url, db_schema="APP", jdbc_options={"driver": DRIVER}
+    )
+    n_combined_bank = sum(1 for d in COMBINED_DOCS.values() if "BankScrapeData" in d)
+    assert counts["bank_scrape_info"] == len(BANK_DOCS) + n_combined_bank
+    assert counts["transactions"] > 0
+    for name, n in counts.items():
+        assert _read(spark, f"APP.{name}", url).count() == n, name

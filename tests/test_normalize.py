@@ -301,6 +301,65 @@ def test_run_batch_pipeline_end_to_end(spark, tmp_path):
     }
 
 
+def test_run_batch_pipeline_counts_rows_during_the_writes(spark, tmp_path, monkeypatch):
+    """Row counts ride on the sink writes (``df.observe``): a call over
+    the mixed four-form folder plus one malformed file launches exactly
+    one job per table write and one per dead-letter write, and no count
+    jobs, and every count it reports equals the parquet read-back."""
+    import os
+
+    from pyspark.sql import DataFrameWriter
+
+    from etl_sample_spark.pipeline import run_batch_pipeline
+    from tests.fixtures import ACTION_DOCS, BANK_DOCS, COMBINED_DOCS, CREDIT_DOCS, write_docs
+
+    src = str(tmp_path / "in")
+    for docs in (BANK_DOCS, CREDIT_DOCS, COMBINED_DOCS, ACTION_DOCS):
+        write_docs(src, docs)
+    with open(os.path.join(src, "BAD001_bank_scrape.json"), "w") as f:
+        f.write("{broken json")
+    out, dlq = str(tmp_path / "star"), str(tmp_path / "dead")
+
+    writes: list[str] = []
+    parquet = DataFrameWriter.parquet
+
+    def counting_parquet(self, path, *args, **kwargs):
+        writes.append(path)
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", counting_parquet)
+    sc = spark.sparkContext
+    group = "test-run-batch-pipeline-jobs"
+    sc.setJobGroup(group, "run_batch_pipeline job count")
+    try:
+        counts = run_batch_pipeline(spark, src, parquet_out=out, dead_letter_dir=dlq)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+
+    assert writes.count(dlq) == 4  # one dead-letter write per form
+    assert len(jobs) == len(writes)  # no job beyond the writes
+    assert set(counts) - {"__quarantined"} == set(os.listdir(out))
+    for name, n in counts.items():
+        if name != "__quarantined":
+            assert spark.read.parquet(os.path.join(out, name)).count() == n, name
+    assert counts["__quarantined"] == spark.read.parquet(dlq).count() == 1
+
+
+def test_run_batch_pipeline_without_a_sink_raises(spark, tmp_path):
+    """Counts come from the sink writes, so a call with no sink would
+    have nothing to count: it fails up front instead."""
+    from etl_sample_spark.pipeline import run_batch_pipeline
+    from tests.fixtures import BANK_DOCS, write_docs
+
+    src = write_docs(str(tmp_path / "in"), BANK_DOCS)
+    with pytest.raises(ValueError, match="needs a sink"):
+        run_batch_pipeline(spark, src)
+    with pytest.raises(ValueError, match="needs a sink"):
+        run_batch_pipeline(spark, src, dead_letter_dir=str(tmp_path / "dead"))
+
+
 def test_empty_tu_ffr_array_skips_instead_of_crashing(spark, tmp_path_factory):
     """r11 review regression: a document with "TU_FFR_Report": [] (valid
     JSON, passes the IS-NOT-NULL required guard) used to crash the WHOLE

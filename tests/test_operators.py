@@ -2062,6 +2062,22 @@ def test_bpe_merges_are_classic(spark, sf_dir):
         seqs = new
 
 
+def test_pq_assign_codes_reserved_column_clash_raises(spark):
+    """The code columns ``__code0..__code{m-1}`` and the codebook column
+    ``__pq_cb`` are reserved: an input already carrying one fails at
+    build time instead of yielding two same-named columns."""
+    from etl_sample_spark.operators.similarity import pq_assign_codes
+
+    books = [[[0.0, 0.0]], [[0.0, 0.0]]]  # m=2, ksub=1, ds=2
+    for col in ("__code0", "__code1", "__CODE1", "__pq_cb"):
+        df = spark.createDataFrame([(0, [1.0, 2.0, 3.0, 4.0], 7)], f"vec_id INT, embedding ARRAY<DOUBLE>, {col} INT")
+        with pytest.raises(ValueError, match="reserved columns"):
+            pq_assign_codes(df, books)
+    # __code2 is not an output column for m=2, so it passes through
+    df = spark.createDataFrame([(0, [1.0, 2.0, 3.0, 4.0], 7)], "vec_id INT, embedding ARRAY<DOUBLE>, __code2 INT")
+    assert pq_assign_codes(df, books).columns == ["vec_id", "embedding", "__code2", "__code0", "__code1"]
+
+
 def test_pq_adc_reconstruction_and_recall(spark, sf_dir):
     """PQ structural guarantees: codes are in [0, ksub); the query
     vector's own ADC distance (its quantization error) is the smallest
