@@ -15,7 +15,7 @@ plumbing (shingling, band explode, candidate join) is unchanged.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from etl_sample_spark.pinning import pin as _branch_pin
@@ -406,7 +406,7 @@ def simhash_cluster_assign(
     Scale shape — contract by signature FIRST: documents sharing a
     signature are Hamming-0 neighbors, so connected components over the
     DISTINCT-signature graph equal components over the document graph.
-    The banded pair join and the label-propagation closure therefore run
+    The banded pair join and the connected-components closure therefore run
     on at most ``min(n_docs, 2**bits)`` signature nodes, NOT on n docs.
     This kills both blowups of the pair-list contract measured in
     VERIFY_r14 §7 on homogeneous corpora (Θ(density·n²) output,
@@ -471,7 +471,7 @@ def simhash_cluster_assign(
     )
 
     # Components over the signature graph: comp_sig = min reachable
-    # signature value (label propagation, exact).
+    # signature value (large-star/small-star, exact).
     comp = neardup_clusters(sig_pairs).select(
         F.col("doc_id").alias("simhash"), F.col("cluster_id").alias("comp_sig")
     )
@@ -554,22 +554,51 @@ def neardup_clusters(
     pairwise similarity into the actual dedup decision (keep one doc per
     cluster).
 
-    Label propagation to fixpoint: every node adopts the smallest label
-    reachable over one edge, iterated. Chain components converge in
-    O(diameter) rounds; ``max_iters`` bounds the worst case and raises
-    if not converged rather than returning wrong clusters. Each round is
-    one shuffle (groupBy node) over the EDGE set — no driver-side graph.
+    Algorithm: alternating large-star / small-star steps (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC 2014) over the
+    undirected edge set. Each step is ONE window pass partitioned by node
+    (min, max and lag over the neighbour) — no join, no ``distinct()``
+    exchange (the lag drops repeated edges), no driver-side graph:
 
-    At 100 TB: near-dup components are overwhelmingly tiny (pairs or
-    small stars), so rounds needed ≈ 2-3; checkpoint every few rounds if
-    lineage depth becomes a problem.
+    * large-star links every strictly LARGER neighbour of u to the
+      minimum of u's closed neighbourhood;
+    * small-star links u and each of its smaller neighbours to the
+      minimum of that set.
 
-    Checkpoint modes: by default each round pins its result with
+    Both steps keep every component connected and never merge two, and
+    the alternation shrinks each component to a star centred on its
+    minimum in O(log² n) alternations (Kiveris et al.; the diameter-10
+    sf0.01 embedding graph needs 4).
+
+    Convergence check, exact for every orderable key type: the
+    large-star window also counts the nodes of ITS INPUT that have a
+    smaller neighbour and more than one distinct neighbour. When there
+    are none, every node with a smaller neighbour has exactly that one
+    neighbour and every other node has only larger ones: a star forest
+    centred on each component's minimum, so the cluster id of a node is
+    the minimum of its closed neighbourhood, read straight off the
+    frame the check ran on. The count rides the step's eager checkpoint
+    through ``df.observe`` — no extra job.
+
+    ``max_iters`` bounds the large-star passes, i.e. the alternations
+    (the first pass only checks the input graph, so a graph that already
+    is a star forest — a set of pairs — takes one); if the last pass
+    still counts a non-star node this raises ``RuntimeError`` instead of
+    returning wrong clusters.
+
+    Degenerate input: every id in ``pairs`` gets exactly one row, so an
+    id seen only in self-pairs ``(x, x)`` or only next to a null is its
+    own cluster; repeated pairs and both orientations of a pair are one
+    edge. A null id gets one row ``(null, c)``, where c is the smallest
+    cluster id among its non-null partners (null if it has none); a null
+    never links its partners to each other.
+
+    Checkpoint modes: by default each pass pins its result with
     ``localCheckpoint`` (executor-local blocks — fast, but LOST if an
     executor dies, which fails the job on a real cluster). Pass
     ``checkpoint_dir`` to use reliable ``checkpoint()`` into that
-    (HDFS/object-store) directory instead: each round's state survives
-    executor loss at the price of a write per round. local[*] tests run
+    (HDFS/object-store) directory instead: each pass's state survives
+    executor loss at the price of a write per pass. local[*] tests run
     both; clusters should always set it.
     """
     if checkpoint_dir is not None:
@@ -580,109 +609,89 @@ def neardup_clusters(
             return df.checkpoint(eager=True)
         return df.localCheckpoint(eager=True)
 
-    edges = _pin(
-        # Both edge directions from ONE evaluation of `pairs` (r16): the
-        # old two-branch union re-ran the whole upstream pair generation
-        # (LSH join + similarity) once per branch — Spark shares no
-        # common subtree across union arms, and the arms' projections
-        # differ so exchange reuse cannot see them. An exploded 2-struct
-        # array emits the same (src, dst) multiset in one pass; measured
-        # at sf0.1 the edges pin drops 11.4 s → ~7 s on the embedding
-        # graph. Values identical (same set, distinct() downstream).
-        pairs.select(
+    u, v, lo, first = (F.col(c) for c in ("u", "v", "lo", "first"))
+    star_min = F.least(u, lo)  # min of u's closed neighbourhood
+
+    def _star(edges: DataFrame) -> DataFrame:
+        """Directed edges (u, v), each kept once, with the min/max of
+        u's neighbours other than u itself (self-loops and nulls are no
+        neighbours) and a flag on u's first row."""
+        w = Window.partitionBy("u").orderBy("v")
+        whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        nbr = F.when(v != u, v)
+        return edges.select(
+            "u",
+            "v",
+            F.min(nbr).over(whole).alias("lo"),
+            F.max(nbr).over(whole).alias("hi"),
+            (F.row_number().over(w) == 1).alias("first"),
+            F.lag("v").over(w).alias("prev"),
+        ).where(first | ~v.eqNullSafe(F.col("prev")))
+
+    # Undirected edges as (x, y), one orientation each; the large-star
+    # pass reads both. Self-pairs and null ids stay in the first pass:
+    # they are what keeps such ids in the output.
+    state = pairs.select(F.col("a_id").alias("x"), F.col("b_id").alias("y"))
+    null_partners = None
+    for i in range(max_iters):
+        both = state.select(
             F.explode(
                 F.array(
-                    F.struct(F.col("a_id").alias("src"), F.col("b_id").alias("dst")),
-                    F.struct(F.col("b_id").alias("src"), F.col("a_id").alias("dst")),
+                    F.struct(F.col("x").alias("u"), F.col("y").alias("v")),
+                    F.struct(F.col("y").alias("u"), F.col("x").alias("v")),
                 )
             ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .distinct()
-        # Materialized once: every round joins against it, and iterating
-        # over an unpinned lineage re-derives the pair generation each time.
-    )
-    labels = _pin(
-        edges.select(F.col("src").alias("node"), F.col("src").alias("label"))
-        .groupBy("node")
-        .agg(F.min("label").alias("label"))
-    )
-
-    # Convergence check (r17, r16 VERDICT item 6): labels are MONOTONE
-    # non-increasing — propagation takes a min that includes the node's
-    # own previous label, and the pointer jump adopts label(label),
-    # which induction bounds by the label itself (every node's label ≤
-    # its id, starting from label = id). So for INTEGRAL ids "no label
-    # changed" ⟺ "Σ labels unchanged" (strictly smaller anywhere ⇒
-    # strictly smaller sum), and the fixpoint test is ONE aggregate over
-    # the already-pinned frame instead of a self-join + limit + count
-    # per round (~0.2 s of fixed job overhead × rounds × 3 cluster
-    # queries at sf0.1). Decimal(38,0) keeps the sum exact far past any
-    # bigint id range × row count. Non-integral label types (the
-    # entity-resolution caller clusters on STRING keys) have no exact
-    # sum, so they keep the join-based check. Fixpoint results are
-    # identical either way: the loop still returns the first new_labels
-    # that equals its predecessor row-for-row.
-    integral_labels = dict(labels.dtypes)["label"] in {
-        "tinyint", "smallint", "int", "bigint"
-    }
-
-    def _label_sum(frame: DataFrame):
-        return frame.agg(F.sum(F.col("label").cast("decimal(38,0)"))).head()[0]
-
-    def _changed_join(new: DataFrame, old: DataFrame) -> bool:
-        return (
-            new.alias("n")
-            .join(old.alias("o"), "node")
-            .where(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-            > 0
-        )
-
-    prev_sum = _label_sum(labels) if integral_labels else None
-    for _ in range(max_iters):
-        neighbor_labels = (
-            edges.join(labels, edges.dst == labels.node)
-            .select(F.col("src").alias("node"), "label")
-        )
-        # localCheckpoint per round: iterative plans double their lineage
-        # every iteration otherwise — the recomputation is exponential and
-        # OOMs the driver on plan state alone. Checkpointing makes each
-        # round O(edges) and the loop O(rounds * edges).
-        propagated = _pin(
-            labels.unionByName(neighbor_labels)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-            # Materialized before the self-join below: joining a plan to
-            # itself through aliases trips attribute resolution under
-            # checkpointing (key-not-found on the shared attribute ids);
-            # a checkpointed child gives the two sides distinct lineages.
-        )
-        # Pointer jumping: also adopt the label OF my label (path
-        # compression) — chains halve every round, so convergence is
-        # O(log diameter) instead of O(diameter); plain propagation
-        # fails to converge on long chained components.
-        label_of_label = propagated.select(
-            F.col("node").alias("ll_node"), F.col("label").alias("ll_label")
-        )
-        new_labels = _pin(
-            propagated.join(label_of_label, propagated.label == label_of_label.ll_node, "left")
-            .select(
-                "node",
-                F.coalesce("ll_label", "label").alias("label"),
+        ).select("e.u", "e.v")
+        seen = Observation()
+        large = _pin(
+            _star(both)
+            .observe(
+                seen,
+                F.count_if(first & (lo < u) & (lo != F.col("hi"))).alias("not_star"),
+                F.count_if(first & u.isNull()).alias("null_ids"),
             )
+            .select("u", "v", "lo", "first")
         )
-        if integral_labels:
-            new_sum = _label_sum(new_labels)
-            converged = new_sum == prev_sum
-            prev_sum = new_sum
-        else:
-            converged = not _changed_join(new_labels, labels)
-        labels = new_labels
-        if converged:
-            return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
-    raise RuntimeError(f"neardup_clusters did not converge in {max_iters} rounds")
+        stats = seen.get
+        if i == 0 and stats["null_ids"]:
+            null_partners = large.where(u.isNull()).select(
+                u.alias("null_id"), v.alias("partner")
+            )
+        if stats["not_star"] == 0:
+            clusters = large.where(first & u.isNotNull()).select(
+                u.alias("doc_id"), star_min.alias("cluster_id")
+            )
+            if null_partners is not None:
+                clusters = clusters.unionByName(
+                    null_partners.join(clusters, F.col("partner") == F.col("doc_id"), "left")
+                    .groupBy(F.col("null_id").alias("doc_id"))
+                    .agg(F.min("cluster_id").alias("cluster_id"))
+                )
+            return clusters
+        # Large-star output as (larger, smaller): each larger neighbour
+        # links to star_min; an id with no neighbour keeps a self-loop so
+        # it survives to the output.
+        up = v > u
+        linked = large.where(u.isNotNull() & (up | (first & lo.isNull()))).select(
+            F.when(up, v).otherwise(u).alias("u"),
+            F.when(up, star_min).otherwise(u).alias("v"),
+        )
+        # Small-star: partitioned by the larger end, every row's v is a
+        # smaller neighbour (or u's self-loop).
+        small = _star(linked)
+        state = (
+            small.select(
+                F.explode(
+                    F.array(
+                        F.when(first, F.struct(u.alias("x"), star_min.alias("y"))),
+                        F.when(v != star_min, F.struct(v.alias("x"), star_min.alias("y"))),
+                    )
+                ).alias("e")
+            )
+            .where(F.col("e").isNotNull())
+            .select("e.x", "e.y")
+        )
+    raise RuntimeError(f"neardup_clusters did not converge in {max_iters} alternations")
 
 
 def pack_sequences(

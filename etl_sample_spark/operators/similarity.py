@@ -16,6 +16,8 @@ indices so results are reproducible with no RNG state.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -546,13 +548,17 @@ def pq_assign_codes(
     #    every call (training assigns + final encode per query ⇒ ~2-4 s
     #    of fixed driver time per PQ query at any scale);
     # 2. the one-row build side broadcast-nested-loop-joins for free.
-    # Per-row float work is IDENTICAL: the same zip_with/aggregate fold
-    # over the same doubles, now read via element_at from the joined
-    # column rather than a Literal — codes are bit-identical.
+    # The frame is ONE JSON string literal parsed by from_json over
+    # range(1), so building it runs no Python worker. json.dumps writes
+    # each double's shortest round-trip repr and the JVM parse is
+    # correctly rounded, so the doubles — and the codes — are
+    # bit-identical.
     spark = embeddings.sparkSession
-    cb_df = spark.createDataFrame(
-        [([[ [float(x) for x in cen] for cen in book] for book in codebooks],)],
-        schema="__pq_cb ARRAY<ARRAY<ARRAY<DOUBLE>>>",
+    cb_df = spark.range(1).select(
+        F.from_json(
+            F.lit(json.dumps([[[float(x) for x in cen] for cen in book] for book in codebooks])),
+            "array<array<array<double>>>",
+        ).alias("__pq_cb")
     )
     code_cols = []
     for j in range(m):

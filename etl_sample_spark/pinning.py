@@ -37,12 +37,16 @@ row-UDF, corpus-global window, or accidental cartesian upstream of a pin
 stays visible to them — r15's pinned subtrees were opaque ``LogicalRDD``
 nodes the guards could not see inside (r15 VERDICT "what's wrong" #1).
 
-Iterative lineage TRUNCATION (label propagation and pointer-jumping
-loops in ``operators/dedup.py`` / ``plans/analytics.py``) does NOT route
-through here: there the per-round checkpoint is algorithmically
-load-bearing (plan state doubles every round; the round's self-join
-needs two distinct lineages), not a branch-sharing materialization
-choice, and it must not be disabled by the guard bypass.
+Iterative lineage TRUNCATION (the large-star/small-star loop in
+``operators/dedup.py::neardup_clusters`` and the parent-pointer closure
+in ``plans/analytics.py``) does NOT route through here: there the
+per-pass checkpoint is algorithmically load-bearing, not a
+branch-sharing materialization choice. Each pass's plan is built on the
+previous pass's output, so without the cut the lineage grows with
+every pass (it doubles where a pass joins its state to itself, as the
+closure does); and ``neardup_clusters`` reads its convergence count
+from an ``Observation`` on that same eager checkpoint. It must not be
+disabled by the guard bypass.
 """
 
 from __future__ import annotations

@@ -370,7 +370,7 @@ def simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Oracle = an INDEPENDENT algorithm over the same graph: all-pairs
     # Hamming over DISTINCT signatures (tiny — ≤ min(n, 2^16) rows) +
     # recursive-CTE transitive closure, vs Spark's banded pigeonhole
-    # join + label-propagation fixpoint. Both contract by signature
+    # join + large-star/small-star components. Both contract by signature
     # first (docs sharing a signature are Hamming-0 neighbors), so the
     # closure never sees document cardinality.
     f"""
@@ -996,7 +996,7 @@ def similarity_batch_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "neardup_clusters_documents",
-    # The Spark side is an iterative label-propagation fixpoint; the
+    # The Spark side is iterated large-star/small-star steps; the
     # oracle recomputes the same components declaratively — a recursive
     # transitive closure over the LSH pair graph with MIN-reachable-node
     # as the cluster id. Two entirely different algorithms, one answer.
@@ -1013,10 +1013,10 @@ def similarity_batch_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="L2: near-dup candidate pairs → connected components (cluster id "
     "= min doc_id); the step that turns pairwise similarity into a "
-    "keep-one-per-cluster dedup decision. One shuffle per round, "
-    "converges in O(component diameter) rounds. Oracle = recursive-CTE "
-    "transitive closure: an independent algorithm cross-checking the "
-    "label-propagation fixpoint.",
+    "keep-one-per-cluster dedup decision. Alternating large-star/"
+    "small-star steps, one window shuffle each, converge in O(log^2 n) "
+    "alternations. Oracle = recursive-CTE transitive closure: an "
+    "independent algorithm cross-checking the star iteration.",
 )
 def neardup_clusters_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_sample_spark.operators.dedup import minhash_lsh_candidates, neardup_clusters
@@ -1045,10 +1045,10 @@ def neardup_clusters_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM reach GROUP BY vec ORDER BY vec_id
     """,
     doc="L2+L3: embedding near-dup pairs (cosine >= 0.3 within "
-    "deterministic LSH buckets) -> connected components via label "
-    "propagation; cluster id = min vec_id reachable. The semantic-dedup "
-    "decision step for an embedding corpus: keep one representative per "
-    "cluster. Oracle = recursive-CTE transitive closure over the same "
+    "deterministic LSH buckets) -> connected components via "
+    "large-star/small-star steps; cluster id = min vec_id reachable. "
+    "The semantic-dedup decision step for an embedding corpus: keep one "
+    "representative per cluster. Oracle = recursive-CTE transitive closure over the same "
     "edge set — an independent algorithm, one answer.",
 )
 def embedding_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1100,9 +1100,9 @@ def embedding_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="L2/L4 composition — THE curation decision the clustering exists "
     "for: keep exactly one representative per near-dup cluster, chosen "
     "by quality argmax (tie -> min doc_id); singletons keep themselves. "
-    "100 TB shape: banded LSH pairs (never n²), label propagation (one "
-    "shuffle/round), map-side quality, one window shuffle on cluster_id "
-    "for the argmax. Oracle: recursive-CTE closure + the same ranked "
+    "100 TB shape: banded LSH pairs (never n²), large-star/small-star "
+    "components (one window shuffle per step), map-side quality, one "
+    "window shuffle on cluster_id for the argmax. Oracle: recursive-CTE closure + the same ranked "
     "window in SQL.",
 )
 def semantic_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3160,7 +3160,7 @@ def _fuzzy_pairs_oracle() -> str:
     "repair-back join counting the fact rows each mapping touches. The "
     "full dirty-dimension cleanup a warehouse runs before conformed "
     "joins. Oracle = recursive-CTE transitive closure, an independent "
-    "algorithm vs the label-propagation fixpoint. 100 TB shape: "
+    "algorithm vs the large-star/small-star iteration. 100 TB shape: "
     "everything pairwise happens on the DISTINCT name vocabulary "
     "(dictionary-sized); the only fact-table touch is the final "
     "broadcastable canonical-map join.",

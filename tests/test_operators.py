@@ -159,7 +159,7 @@ def test_simhash_cluster_assign_linear_output_and_exact(spark, sf_dir):
         contract is Θ(n²): 60 identical docs would emit 1,770 pairs; the
         cluster assignment emits 60 rows.
     (b) EXACTNESS — on real data, the assignment equals the brute-force
-        route (exact banded pairs → label-propagation components →
+        route (exact banded pairs → large-star/small-star components →
         singletons keep their own id), i.e. cluster_id is the true min
         doc_id reachable at Hamming ≤ 3.
     """
@@ -265,6 +265,76 @@ def test_embedding_neardup_planted_pairs_recall(spark):
     }
     assert planted <= found, f"missed planted pairs: {sorted(planted - found)}"
     assert found <= truth, f"below-threshold pairs emitted: {sorted(found - truth)}"
+
+
+def _plan_nodes(plan):
+    """Every node of an executed plan, looking through the AQE wrapper
+    and its query stages."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        yield from _plan_nodes(plan.executedPlan())
+        return
+    if name.endswith("QueryStageExec"):
+        yield from _plan_nodes(plan.plan())
+        return
+    yield plan
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+def _conjuncts(expr):
+    if expr.getClass().getSimpleName() == "And":
+        return _conjuncts(expr.left()) + _conjuncts(expr.right())
+    return [expr]
+
+
+def test_embedding_near_duplicates_checks_ids_before_the_fold(spark, sf_dir):
+    """The pair join must test ``a_id < b_id`` BEFORE the 64-element
+    dot-product threshold: ``And`` short-circuits left to right, so a
+    planner that moved the fold first would run it on both orderings of
+    every bucket collision plus the self-pairs (about twice the folds;
+    results unchanged, so only the executed plan shows it)."""
+    from etl_sample_spark.operators.similarity import embedding_near_duplicates
+
+    emb = catalog.table(spark, sf_dir, "embeddings")
+    df = embedding_near_duplicates(emb, threshold=0.3, dim=64, n_planes=4)
+    df.collect()
+    joins = [
+        n
+        for n in _plan_nodes(df._jdf.queryExecution().executedPlan())
+        if n.getClass().getSimpleName().endswith("JoinExec") and n.condition().isDefined()
+    ]
+    folds = [j.condition().get() for j in joins if "zip_with" in j.condition().get().toString()]
+    assert len(folds) == 1, [j.toString() for j in joins]
+    parts = _conjuncts(folds[0])
+    first_fold = next(i for i, c in enumerate(parts) if "zip_with" in c.toString())
+    assert any(
+        c.getClass().getSimpleName() == "LessThan" and c.toString().count("vec_id") == 2
+        for c in parts[:first_fold]
+    ), [c.toString()[:80] for c in parts]
+
+
+def test_embedding_neardup_clusters_build_job_budget(spark):
+    """Building the registry query at sf0.01 (the embeddings the
+    benchmark's query mix reads) must stay within 30 Spark jobs; the
+    per-round label propagation it replaced launched 108 (two eager
+    checkpoints plus a convergence sum per round, nine rounds)."""
+    import os
+
+    from etl_sample_spark.plans import REGISTRY
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sc = spark.sparkContext
+    group = "test-embedding-neardup-clusters-build"
+    sc.setJobGroup(group, "embedding_neardup_clusters build")
+    try:
+        REGISTRY["embedding_neardup_clusters"].spark(spark, os.path.join(repo, "perfbench", "data", "sf0.01"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 30, len(jobs)
 
 
 def test_embedding_neardup_registered_query_nonvacuous(spark, sf_dir):
@@ -2076,6 +2146,38 @@ def test_pq_assign_codes_reserved_column_clash_raises(spark):
     # __code2 is not an output column for m=2, so it passes through
     df = spark.createDataFrame([(0, [1.0, 2.0, 3.0, 4.0], 7)], "vec_id INT, embedding ARRAY<DOUBLE>, __code2 INT")
     assert pq_assign_codes(df, books).columns == ["vec_id", "embedding", "__code2", "__code0", "__code1"]
+
+
+def test_pq_assign_codes_builds_the_codebook_frame_in_the_jvm(spark, sf_dir):
+    """The one-row codebook frame comes from a literal, not from
+    ``createDataFrame`` of a Python list (a pickled Python RDD, shown as
+    ``Scan ExistingRDD``), and the codes still equal a plain-Python
+    squared-L2 argmin over the same doubles, summed in the same order."""
+    from etl_sample_spark.operators.similarity import pq_assign_codes
+
+    emb = catalog.table(spark, sf_dir, "embeddings").orderBy("vec_id").limit(40)
+    rows = emb.collect()
+    # awkward doubles: subnormal, min normal, non-terminating binary, -0.0
+    vals = [5e-324, 2.2250738585072014e-308, 0.1, 1 / 3, -0.0, 0.7]
+    books = [[[vals[(c + d) % 6] * (j + 1) for d in range(16)] for c in range(6)] for j in range(4)]
+    coded = pq_assign_codes(emb, books)
+    got = {r["vec_id"]: [r[f"__code{j}"] for j in range(4)] for r in coded.collect()}
+    assert "ExistingRDD" not in coded._jdf.queryExecution().executedPlan().toString()
+
+    def code(sub, book):
+        dists = []
+        for cen in book:
+            acc = 0.0
+            for x, c in zip(sub, cen):
+                acc += (x - c) * (x - c)
+            dists.append(acc)
+        return dists.index(min(dists))
+
+    want = {
+        r["vec_id"]: [code(list(r["embedding"])[j * 16 : (j + 1) * 16], books[j]) for j in range(4)]
+        for r in rows
+    }
+    assert got == want
 
 
 def test_pq_adc_reconstruction_and_recall(spark, sf_dir):

@@ -13,7 +13,8 @@ from __future__ import annotations
 import json
 import os
 
-from hypothesis import HealthCheck, given, settings
+import pytest
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -864,3 +865,96 @@ def test_bucketed_rank_equals_global_window_for_any_input(spark, vals, width, sb
     tot = got.select("n_total", "cw_total").head()
     assert tot["n_total"] == len(vals)
     assert tot["cw_total"] == sum(w for _, w in vals)
+
+
+def _union_find_clusters(pairs):
+    """Plain-Python reference for ``neardup_clusters``: one row per
+    distinct non-null id with the min id of its component, plus, when a
+    pair holds a null, one ``(None, c)`` row where c is the smallest
+    cluster id among the null's non-null partners (None if it has none).
+    A null links nothing."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        for x in (a, b):
+            if x is not None:
+                parent.setdefault(x, x)
+    for a, b in pairs:
+        if a is not None and b is not None:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    rows = [(x, find(x)) for x in parent]
+    null_partners = [find(p) for a, b in pairs if None in (a, b) for p in (a, b) if p is not None]
+    if any(None in p for p in pairs):
+        rows.append((None, min(null_partners, default=None)))
+    return rows
+
+
+@st.composite
+def _cluster_graphs(draw):
+    """Edge lists shaped to stress connected components: random graphs,
+    long chains over shuffled ids, and stars, then decorated with
+    self-pairs, repeated pairs, flipped orientations and null ids."""
+    shape = draw(st.sampled_from(["random", "chain", "star"]))
+    if shape == "random":
+        pairs = draw(st.lists(st.tuples(st.integers(0, 30), st.integers(0, 30)), min_size=1, max_size=40))
+    elif shape == "chain":
+        ids = draw(st.permutations(range(draw(st.integers(2, 40)))))
+        pairs = list(zip(ids, ids[1:]))
+    else:
+        centre = draw(st.integers(0, 40))
+        leaves = draw(st.lists(st.integers(0, 40), min_size=1, max_size=20))
+        pairs = [(centre, leaf) for leaf in leaves]
+    pairs = [(b, a) if draw(st.booleans()) else (a, b) for a, b in pairs]
+    extra = draw(st.lists(st.sampled_from(pairs), max_size=4))  # repeated pairs
+    extra += [(b, a) for a, b in draw(st.lists(st.sampled_from(pairs), max_size=4))]
+    extra += [(x, x) for x in draw(st.lists(st.integers(0, 45), max_size=3))]
+    extra += draw(
+        st.lists(
+            st.sampled_from([(None, 0), (3, None), (None, None), (None, 44), (45, None)]),
+            max_size=2,
+        )
+    )
+    return pairs + extra
+
+
+@settings(
+    max_examples=20,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(pairs=_cluster_graphs(), as_string=st.booleans())
+@example(pairs=[(1, 1), (2, 3)], as_string=False)  # an id seen only in a self-pair
+@example(pairs=[(None, 5), (7, None), (5, 6)], as_string=True)  # null partners
+@example(pairs=[(None, None), (1, 2)], as_string=False)  # a null paired only with null
+def test_neardup_clusters_matches_union_find(spark, pairs, as_string):
+    """Property: for any edge list, ``neardup_clusters`` returns exactly
+    the union-find components (one row per id, cluster = min id) for
+    BIGINT and STRING keys alike — string ids order lexicographically,
+    so "10" < "9" exercises a key order unlike the integers'."""
+    from etl_sample_spark.operators.dedup import neardup_clusters
+
+    if as_string:
+        pairs = [tuple(None if x is None else str(x) for x in p) for p in pairs]
+    key = "STRING" if as_string else "BIGINT"
+    df = spark.createDataFrame(pairs, f"a_id {key}, b_id {key}")
+    got = [tuple(r) for r in neardup_clusters(df).collect()]
+    assert sorted(got, key=repr) == sorted(_union_find_clusters(pairs), key=repr)
+
+
+def test_neardup_clusters_raises_at_the_iteration_cap(spark):
+    """An 8-node chain is not a star forest after one large-star pass:
+    ``max_iters=1`` must raise instead of returning partial clusters,
+    and the default cap converges on it."""
+    from etl_sample_spark.operators.dedup import neardup_clusters
+
+    chain = spark.createDataFrame([(i, i + 1) for i in range(8 - 1)], "a_id BIGINT, b_id BIGINT")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        neardup_clusters(chain, max_iters=1)
+    assert {r["cluster_id"] for r in neardup_clusters(chain).collect()} == {0}
