@@ -47,12 +47,15 @@ _FRONT_PINS = [
     # r17 optimization round: every query whose code closure changed.
     #
     # Multimodal codec tier (operators/multimodal.py): synthesis inputs
-    # now hash-repartition across cores before the mapInPandas codec
-    # stage (_spread_ids), and the JPEG + IPDV ENCODERS gained numpy
-    # twins (auto-dispatched, bit-identical payloads — shared entropy/
-    # RLE coder, replayed float op order; pinned in
-    # test_operators.py::test_{jpeg,ipdv}_encoder_twins_*). Every query
-    # below strict-sim re-verified at sf0.01 AND sf0.1 this round.
+    # hash-repartition across cores before the mapInPandas codec stage
+    # (_spread_ids). Each format calls ONE production codec directly —
+    # the numpy twins for PNG/JPEG decode and the JPEG + IPDV encoders
+    # (bit-identical to the pure reference twins: shared entropy/RLE
+    # coder, replayed float op order; pinned in
+    # test_operators.py::test_*_twins_bit_identical), the pure LZW
+    # decoder for GIF; the env-selected tiers and their dispatch
+    # registries are gone. Every dirtied query below strict-sim
+    # re-verified at sf0.01 AND sf0.1.
     "multimodal_bmp_decode",
     "multimodal_gif_decode",
     "multimodal_image_features",

@@ -10,16 +10,19 @@ tested. The codec tier is split:
   4-byte-padded BGR rows), no external libraries — so the decode path
   executes end-to-end in this container (``attach_bmp_media`` synthesizes
   genuine BMP payloads to drive it).
-- PNG is decoded FOR REAL too — a pure-Python parser (stdlib ``zlib``
-  inflate + all five PNG filter types: None/Sub/Up/Average/Paeth) for
-  8-bit truecolor and grayscale images, no external libraries
-  (``attach_png_media`` synthesizes genuine zlib-compressed PNG payloads
-  with a different filter on every scanline to drive every unfilter path).
-- JPEG is decoded FOR REAL — a pure-Python baseline sequential JFIF
-  codec (marker walk, canonical Huffman entropy decode with DC
-  prediction, dequantize, dezigzag, separable float IDCT, YCbCr→RGB),
-  no external libraries (``attach_jpeg_media`` synthesizes genuine
-  Huffman-coded payloads to drive it).
+- PNG, baseline JPEG and GIF are decoded FOR REAL, and JPEG and IPDV
+  payloads are encoded for real, with no codec libraries. Each format
+  has ONE production codec, called directly: PNG decode
+  (:func:`_png_raw_numpy`), JPEG decode (:func:`_decode_jpeg_numpy`),
+  the JPEG encoder (:func:`_encode_jpeg_numpy`) and the IPDV encoder
+  (:func:`_encode_ipdv_numpy`) are numpy twins, each bit-identical to a
+  pure-Python twin (:func:`_png_raw`, :func:`_decode_jpeg_pure`,
+  :func:`_encode_jpeg_pure`, :func:`_encode_ipdv_pure`) that stays as the
+  executable reference the tests compare against. GIF decode is the
+  pure-Python LZW decoder (:func:`_decode_gif`): LZW is a serial
+  dependency with a growing dictionary, so there is nothing to vectorize.
+  The ``attach_*_media`` helpers synthesize genuine payloads (a different
+  PNG filter on every scanline, Huffman-coded JPEG) to drive every path.
 - Compressed VIDEO codecs (H.264 etc.) stay STUBBED (patent-encumbered
   bitstream formats, no codec libs here): ``decode_image(..., fake=False)``
   raises ``NotImplementedError`` for unknown formats, and ``fake=True``
@@ -244,19 +247,13 @@ def _png_raw(data: bytes) -> tuple[int, int, int, bytearray]:
 
 
 def _png_raw_numpy(data: bytes) -> tuple[int, int, int, bytearray]:
-    """Accelerated twin of :func:`_png_raw` — same signature, bit-identical
-    output (unfiltering is exact integer arithmetic; the equivalence is
-    pinned byte-for-byte in tests/test_udfs.py).
+    """The production PNG decoder: the numpy twin of :func:`_png_raw` —
+    same signature, bit-identical output (unfiltering is exact integer
+    arithmetic; the equivalence is pinned byte-for-byte in
+    tests/test_operators.py and tests/test_properties.py).
 
-    This is the r12 VERDICT item-5 swap-in demonstration: the documented
-    constant of the multimodal tier is that per-payload decode is pure
-    Python, with the fix being "replace the ``_decode_*`` body with a
-    native call inside the same mapInPandas function". No native image
-    codec exists in this container (no Pillow/libjpeg/OpenCV — see the
-    ``_png_raw_pil`` hook below), so the demonstrated swap uses numpy —
-    C-speed array kernels, the same in-process position a native decoder
-    occupies. Chunk walk and IDAT inflate are shared semantics (inflate
-    is already native via stdlib zlib); the unfilter stage vectorizes:
+    Chunk walk and IDAT inflate are shared semantics (inflate is already
+    native via stdlib zlib); the unfilter stage vectorizes:
 
     - None/Up: whole-row add (one SIMD op per row);
     - Sub (recon[i] = line[i] + recon[i-bpp]): a per-byte-lane cumulative
@@ -334,155 +331,15 @@ def _png_raw_numpy(data: bytes) -> tuple[int, int, int, bytearray]:
     return width, height, bpp, bytearray(recon.tobytes())
 
 
-def _png_raw_pil(data: bytes) -> tuple[int, int, int, bytearray]:
-    """Native-decoder twin of :func:`_png_raw` via Pillow, for
-    environments that have it (THIS container does not — verified r13:
-    no PIL/cv2/scipy/imageio importable; tests/test_udfs.py's
-    equivalence test self-skips). The swap point the SCALE.md multimodal
-    note names: same signature, decode replaced by libpng-backed C."""
-    import io
-
-    from PIL import Image  # noqa: F401 — optional, absent in-container
-
-    im = Image.open(io.BytesIO(data))
-    im.load()
-    if im.mode not in ("L", "RGB"):
-        raise NotImplementedError(f"PIL twin supports L/RGB, got {im.mode}")
-    bpp = 1 if im.mode == "L" else 3
-    return im.width, im.height, bpp, bytearray(im.tobytes())
-
-
-def _png_image_struct():
-    """libpng 1.6's ``png_image`` control struct (simplified API) — a
-    PUBLIC, ABI-stable layout (png.h documents it as the stable
-    interchange struct), unlike the private jpeg_decompress_struct the
-    JPEG hook must treat as opaque."""
-    import ctypes
-
-    class PngImage(ctypes.Structure):
-        _fields_ = [
-            ("opaque", ctypes.c_void_p),
-            ("version", ctypes.c_uint32),
-            ("width", ctypes.c_uint32),
-            ("height", ctypes.c_uint32),
-            ("format", ctypes.c_uint32),
-            ("flags", ctypes.c_uint32),
-            ("colormap_entries", ctypes.c_uint32),
-            ("warning_or_error", ctypes.c_uint32),
-            ("message", ctypes.c_char * 64),
-        ]
-
-    return PngImage
-
-
-@functools.lru_cache(maxsize=1)
-def _libpng_available() -> bool:
-    """Probe the system-libpng hook IN PROCESS — safe, unlike the JPEG
-    probe: libpng's simplified API reports failures by returning 0 with
-    a message (setjmp is internal to the library), so a disagreeing
-    build costs a ValueError, never the worker. The probe decodes one
-    tiny payload and requires BYTE equality with the pure twin (PNG is
-    lossless — native must match exactly, no tolerance)."""
-    try:
-        payload = encode_png(5, 6, lambda x, y: bytes(((x * 7) % 256, (y * 11) % 256, 9)))
-        return _png_raw_libpng(payload) == _png_raw(payload)
-    except Exception:
-        return False
-
-
-def _png_raw_libpng(data: bytes) -> tuple[int, int, int, bytearray]:
-    """Native-decoder twin of :func:`_png_raw` via the SYSTEM libpng
-    (libpng16.so.16, present in this container — no install), driven
-    through ctypes against the documented simplified ``png_image`` API.
-    PNG decode is LOSSLESS, so unlike the JPEG native hook this twin is
-    pinned BYTE-IDENTICAL to the pure/numpy twins. Only the layouts the
-    portable twins accept are served (8-bit gray / RGB, non-interlaced
-    producers in-repo); anything else raises like the Pillow twin."""
-    import ctypes
-
-    lp = ctypes.CDLL("libpng16.so.16")
-    img = _png_image_struct()()
-    img.version = 1  # PNG_IMAGE_VERSION
-    buf = ctypes.create_string_buffer(data, len(data))
-    if not lp.png_image_begin_read_from_memory(ctypes.byref(img), buf, len(data)):
-        raise ValueError(
-            f"libpng rejected the PNG payload: {img.message.decode(errors='replace')}"
-        )
-    # After a successful begin_read, libpng requires png_image_free on
-    # every path that does not reach a successful finish_read (which
-    # frees internally) — without it, each rejected/failed payload
-    # leaks the control struct's opaque allocation.
-    try:
-        # PNG_FORMAT_GRAY = 0, PNG_FORMAT_RGB = 2 (the COLOR flag); anything
-        # else (alpha, 16-bit linear, colormap) is outside the twins' remit
-        if img.format not in (0, 2):
-            raise NotImplementedError(
-                f"libpng twin supports gray/RGB, got format {img.format}"
-            )
-        bpp = 1 if img.format == 0 else 3
-        out = ctypes.create_string_buffer(img.width * img.height * bpp)
-        if not lp.png_image_finish_read(ctypes.byref(img), None, out, 0, None):
-            raise ValueError(
-                f"libpng failed to decode the PNG payload: "
-                f"{img.message.decode(errors='replace')}"
-            )
-    except BaseException:
-        lp.png_image_free(ctypes.byref(img))
-        raise
-    return int(img.width), int(img.height), bpp, bytearray(out.raw)
-
-
-# Decoder registry for the PNG payload path. "auto" (the default) uses
-# the numpy-accelerated twin — numpy ships with every PySpark worker
-# (pandas/Arrow dependency), and the output is bit-identical to "pure"
-# (test-pinned). Select explicitly via SPARK_GRAFT_PNG_DECODER
-# (executors inherit it in local mode; set spark.executorEnv.* on a
-# cluster): "pure" keeps the stdlib-only oracle twin, "pil" opts into
-# Pillow where installed, "libpng" into the ctypes system-library hook
-# (byte-identical — PNG is lossless — and probe-gated, see
-# _libpng_available).
-_PNG_RAW_IMPLS = {
-    "pure": _png_raw,
-    "numpy": _png_raw_numpy,
-    "pil": _png_raw_pil,
-    "libpng": _png_raw_libpng,
-}
-
-
-def _png_raw_dispatch(data: bytes) -> tuple[int, int, int, bytearray]:
-    import os
-
-    choice = os.environ.get("SPARK_GRAFT_PNG_DECODER", "auto")
-    if choice == "auto":
-        try:
-            import numpy  # noqa: F401
-
-            choice = "numpy"
-        except ImportError:
-            choice = "pure"
-    try:
-        impl = _PNG_RAW_IMPLS[choice]
-    except KeyError:
-        raise ValueError(
-            f"SPARK_GRAFT_PNG_DECODER={choice!r}: expected one of "
-            f"{sorted(_PNG_RAW_IMPLS)} or 'auto'"
-        ) from None
-    return impl(data)
-
-
 def _decode_png(data: bytes) -> tuple[int, int, float]:
     """(width, height, mean sample value) of a PNG payload."""
-    width, height, bpp, recon = _png_raw_dispatch(data)
+    import numpy as np
+
+    width, height, bpp, recon = _png_raw_numpy(data)
     n = width * height * bpp
     if n == 0:
         return width, height, 0.0
-    try:
-        import numpy as np
-
-        mean = float(np.frombuffer(bytes(recon), dtype=np.uint8).sum()) / n
-    except ImportError:
-        mean = sum(recon) / n
-    return width, height, mean
+    return width, height, float(np.frombuffer(bytes(recon), dtype=np.uint8).sum()) / n
 
 
 def _spread_ids(docs: DataFrame, id_col: str) -> DataFrame:
@@ -572,8 +429,8 @@ def decode_image(media: DataFrame, fake: bool = False) -> DataFrame:
 
     Arrow streams partition data in bounded batches; the UDF sees pandas
     DataFrames with columns (doc_id, media_bytes, media_meta) and yields
-    the decoded schema. BMP, PNG, and baseline JPEG payloads are decoded
-    for real by the pure-Python codecs; other formats raise
+    the decoded schema. BMP, PNG, baseline JPEG and GIF payloads are decoded
+    for real by the in-module codecs; other formats raise
     ``NotImplementedError`` unless ``fake=True``, which computes
     deterministic stats from the raw bytes so the full distributed path
     is testable for any format.
@@ -593,7 +450,7 @@ def decode_image(media: DataFrame, fake: bool = False) -> DataFrame:
                     w, h, _nc, jsamples = _decode_jpeg(payload)
                     mean = sum(jsamples) / len(jsamples) if jsamples else 0.0
                 elif fmt == "gif" and payload[:6] in (b"GIF87a", b"GIF89a"):
-                    w, h, mean = _decode_gif_dispatch(payload)
+                    w, h, mean = _decode_gif(payload)
                 elif fake:
                     m = r["media_meta"]
                     w, h = int(m["width"]), int(m["height"])
@@ -905,7 +762,7 @@ def _encode_jpeg_numpy(
     (Python ``round`` on a float and ``np.rint`` are both IEEE
     roundTiesToEven). The entropy coder is the SAME code
     (:func:`_emit_quant_block`), fed the same ints. Pinned by
-    tests/test_operators.py::test_jpeg_encoder_twins_bit_identical_and_env_selectable
+    tests/test_operators.py::test_jpeg_encoder_twins_bit_identical
     over dims × gray/color × qtables × restart intervals."""
     import numpy as np
 
@@ -987,18 +844,6 @@ def _encode_jpeg_numpy(
     return bytes(out)
 
 
-# Encoder registry, mirroring _JPEG_IMPLS/_PNG_RAW_IMPLS: "auto" (the
-# default) takes the numpy twin — bit-identical by construction (shared
-# entropy coder, replayed float op order) and test-pinned — and falls
-# back to pure when numpy is unavailable. There is no native encoder
-# tier: synthesis exists to DRIVE the decoders, and the pure encoder
-# stays the executable reference.
-_JPEG_ENC_IMPLS = {
-    "pure": _encode_jpeg_pure,
-    "numpy": _encode_jpeg_numpy,
-}
-
-
 def encode_jpeg(
     width: int,
     height: int,
@@ -1007,25 +852,10 @@ def encode_jpeg(
     qtable: list[int] | None = None,
     restart_interval: int = 0,
 ) -> bytes:
-    """Baseline JFIF encoder — dispatches on ``SPARK_GRAFT_JPEG_ENCODER``
-    (``auto``/``pure``/``numpy``; see :func:`_encode_jpeg_pure` for the
-    format contract)."""
-    import os
-
-    choice = os.environ.get("SPARK_GRAFT_JPEG_ENCODER", "auto")
-    if choice == "auto":
-        try:
-            import numpy  # noqa: F401
-        except ImportError:
-            choice = "pure"
-        else:
-            choice = "numpy"
-    if choice not in _JPEG_ENC_IMPLS:
-        raise ValueError(
-            f"SPARK_GRAFT_JPEG_ENCODER={choice!r}: expected one of "
-            f"{sorted(_JPEG_ENC_IMPLS)} or 'auto'"
-        )
-    return _JPEG_ENC_IMPLS[choice](width, height, pixel, gray, qtable, restart_interval)
+    """Baseline JFIF encoder: the numpy twin, bit-identical to
+    :func:`_encode_jpeg_pure` (the reference; see it for the format
+    contract)."""
+    return _encode_jpeg_numpy(width, height, pixel, gray, qtable, restart_interval)
 
 
 class _BitReader:
@@ -1707,12 +1537,9 @@ def _decode_jpeg_numpy(data: bytes) -> tuple[int, int, int, list[int]]:
     doubles round identically and the final ``floor(v + 0.5)`` can never
     flip).
 
-    This extends the r12 VERDICT item-5 swap-in demonstration from PNG to
-    the WORST documented multimodal constant (pure-Python color JPEG,
-    ~0.02 MB/s/core — SCALE.md). Same container reality as PNG: no native
-    codec importable, so the swap-in is numpy (C-speed kernels in the
-    exact in-process position libjpeg would occupy; the Pillow hook below
-    is wired for environments that have it). What changes vs pure:
+    The pure decoder is the slowest multimodal stage (pure-Python color
+    JPEG, ~0.02 MB/s/core — SCALE.md); this twin moves the per-block
+    work into numpy kernels. What changes vs pure:
 
     - Huffman entropy decode stays a Python loop (a bitstream is a true
       serial dependency) but reads via a byte-wise accumulator + 16-bit
@@ -1952,187 +1779,10 @@ def _decode_jpeg_numpy(data: bytes) -> tuple[int, int, int, list[int]]:
     raise ValueError("JPEG missing SOF/SOS")
 
 
-def _decode_jpeg_pil(data: bytes) -> tuple[int, int, int, list[int]]:
-    """Native-decoder twin via Pillow (absent in THIS container — verified
-    r13: no PIL/cv2/scipy/imageio importable; the equivalence test
-    self-skips). Unlike PNG, JPEG decoders are NOT bit-identical across
-    implementations: ITU T.81 does not mandate an exact IDCT (T.83 only
-    bounds its error), and libjpeg uses integer IDCT approximations — so
-    the PIL twin is pinned to a per-sample tolerance, not byte equality."""
-    import io
-
-    from PIL import Image  # noqa: F401 — optional, absent in-container
-
-    im = Image.open(io.BytesIO(data))
-    im.load()
-    if im.mode not in ("L", "RGB"):
-        raise NotImplementedError(f"PIL twin supports L/RGB, got {im.mode}")
-    ncomp = 1 if im.mode == "L" else 3
-    return im.width, im.height, ncomp, list(im.tobytes())
-
-
-@functools.lru_cache(maxsize=1)
-def _libjpeg_available() -> bool:
-    """Hazard-gated probe for the system libjpeg hook: run the ctypes
-    decoder against both twins in a SUBPROCESS first (the ABI-probing
-    technique in :func:`_decode_jpeg_libjpeg` would take down the whole
-    worker if a libjpeg build ever disagreed about struct layout —
-    jpeg's default error path calls ``exit()``). Only a subprocess that
-    decodes gray + color payloads within the documented tolerance
-    enables in-process use. lru_cache (not a module global) on purpose:
-    runtime-mutable globals leak into the pin-policy fingerprint."""
-    import os
-    import subprocess
-    import sys
-
-    code = (
-        "import sys; sys.path.insert(0, %r)\n"
-        "from etl_sample_spark.operators import multimodal as mm\n"
-        "for gray in (True, False):\n"
-        "    p = mm.encode_jpeg(17, 9, lambda x, y: ((x*37+y*11) %% 256) if gray"
-        " else ((x*37) %% 256, (y*53) %% 256, ((x+y)*29) %% 256), gray=gray)\n"
-        "    w, h, n, s = mm._decode_jpeg_libjpeg(p)\n"
-        "    pw, ph, pn, ps = mm._decode_jpeg_pure(p)\n"
-        "    assert (w, h, n) == (pw, ph, pn), 'shape'\n"
-        "    assert max(abs(a - b) for a, b in zip(s, ps)) <= 3, 'tolerance'\n"
-        "print('ok')\n"
-    ) % (os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),)
-    try:
-        out = subprocess.run(
-            [sys.executable, "-c", code], capture_output=True, timeout=60
-        )
-        return out.returncode == 0 and b"ok" in out.stdout
-    except Exception:
-        return False
-
-
-def _decode_jpeg_libjpeg(data: bytes) -> tuple[int, int, int, list[int]]:
-    """Native-decoder twin via the SYSTEM libjpeg-turbo (libjpeg.so.62,
-    present in this container — no install needed), driven through
-    ctypes against the classic jpeg62 ABI.
-
-    The jpeg_decompress_struct layout is version-dependent, so this
-    never reads or writes library-private fields: the struct lives in
-    an OVERSIZED opaque buffer, only the ``err`` pointer (field 0 of
-    the common fields, ABI-stable) is set, and width/height/ncomp come
-    from our own SOF parse instead of the struct. The one layout-
-    dependent call — ``jpeg_CreateDecompress``'s structsize check —
-    is neutralized by overriding ``error_exit`` (field 0 of
-    jpeg_error_mgr, also ABI-stable) with a recording no-op; the
-    library then initializes our larger-than-needed buffer and every
-    later call uses its own compiled offsets within it. Callers gate on
-    :func:`_libjpeg_available`, which proves the whole dance in a
-    subprocess before any in-process use.
-
-    Like the Pillow twin: NOT bit-identical to the pure decoder (T.81
-    mandates no exact IDCT; libjpeg-turbo uses integer/SIMD IDCTs), so
-    tests pin shape exactly and samples to a small per-sample tolerance
-    (measured max |Δ| = 2 on near-lossless payloads). Unlike the other
-    twins it accepts the full baseline feature set libjpeg supports
-    (subsampled chroma, restart markers) — but it trusts its input:
-    corrupt streams are undefined here (the error hook records and
-    aborts, but jpeg's error paths assume no-return), which is why it
-    is opt-in and never the ``auto`` choice.
-    """
-    import ctypes
-    import struct
-
-    # our own SOF walk for (width, height, ncomp) — no struct reads
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG payload")
-    pos = 2
-    width = height = ncomp = None
-    while pos + 4 <= len(data):
-        marker = data[pos + 1]
-        if marker == 0xD9:
-            break
-        (seglen,) = struct.unpack_from(">H", data, pos + 2)
-        if marker in (0xC0, 0xC1, 0xC2):  # baseline/extended/progressive
-            _, height, width, ncomp = struct.unpack_from(">BHHB", data, pos + 4)
-            break
-        pos += 2 + seglen
-    if width is None:
-        raise ValueError("JPEG missing SOF/SOS")
-
-    lj = ctypes.CDLL("libjpeg.so.62")
-    flags = []
-    err_cb = ctypes.CFUNCTYPE(None, ctypes.c_void_p)(lambda _ci: flags.append(1))
-    errbuf = ctypes.create_string_buffer(1024)
-    lj.jpeg_std_error.restype = ctypes.c_void_p
-    errp = lj.jpeg_std_error(ctypes.byref(errbuf))
-    ctypes.cast(errp, ctypes.POINTER(ctypes.c_void_p))[0] = ctypes.cast(
-        err_cb, ctypes.c_void_p
-    ).value
-
-    cinfo = ctypes.create_string_buffer(8192)
-    ctypes.cast(ctypes.byref(cinfo), ctypes.POINTER(ctypes.c_void_p))[0] = errp
-    lj.jpeg_CreateDecompress(ctypes.byref(cinfo), 62, 4096)
-    flags.clear()  # the structsize mismatch fires once by design
-    try:
-        src = ctypes.create_string_buffer(data, len(data))
-        lj.jpeg_mem_src(ctypes.byref(cinfo), src, len(data))
-        if lj.jpeg_read_header(ctypes.byref(cinfo), 1) != 1 or flags:
-            raise ValueError("libjpeg rejected the JPEG header")
-        if lj.jpeg_start_decompress(ctypes.byref(cinfo)) != 1 or flags:
-            raise ValueError("libjpeg could not start decompression")
-        row = ctypes.create_string_buffer(width * ncomp)
-        rowp = (ctypes.c_void_p * 1)(ctypes.cast(row, ctypes.c_void_p))
-        out = bytearray()
-        for _y in range(height):
-            if lj.jpeg_read_scanlines(ctypes.byref(cinfo), rowp, 1) != 1 or flags:
-                raise ValueError("libjpeg scanline decode failed")
-            out += row.raw
-        lj.jpeg_finish_decompress(ctypes.byref(cinfo))
-    finally:
-        lj.jpeg_destroy_decompress(ctypes.byref(cinfo))
-    return width, height, ncomp, list(out)
-
-
-# Decoder registry for the JPEG payload path — same contract as
-# _PNG_RAW_IMPLS: "auto" (default) takes the numpy twin (bit-identical,
-# test-pinned) when numpy imports, else pure; SPARK_GRAFT_JPEG_DECODER
-# selects explicitly ("pil" opts into Pillow where installed, "libjpeg"
-# into the ctypes system-library hook — both tolerance semantics, see
-# _decode_jpeg_pil / _decode_jpeg_libjpeg).
-_JPEG_IMPLS = {
-    "pure": _decode_jpeg_pure,
-    "numpy": _decode_jpeg_numpy,
-    "pil": _decode_jpeg_pil,
-    "libjpeg": _decode_jpeg_libjpeg,
-}
-
-
 def _decode_jpeg(data: bytes) -> tuple[int, int, int, list[int]]:
-    import os
-
-    choice = os.environ.get("SPARK_GRAFT_JPEG_DECODER", "auto")
-    if choice == "auto":
-        try:
-            import numpy  # noqa: F401
-
-            choice = "numpy"
-        except ImportError:
-            choice = "pure"
-    try:
-        impl = _JPEG_IMPLS[choice]
-    except KeyError:
-        raise ValueError(
-            f"SPARK_GRAFT_JPEG_DECODER={choice!r}: expected one of "
-            f"{sorted(_JPEG_IMPLS)} or 'auto'"
-        ) from None
-    if choice == "libjpeg" and not _libjpeg_available():
-        # The in-process ctypes call can exit()/segfault the whole
-        # executor on an ABI-disagreeing libjpeg build (jpeg's default
-        # error path calls exit(), and the hook's recording no-op
-        # error_exit returns — undefined per libjpeg docs). Only the
-        # subprocess probe may authorize it; refuse loudly otherwise.
-        raise RuntimeError(
-            "SPARK_GRAFT_JPEG_DECODER=libjpeg: the subprocess hazard "
-            "probe (_libjpeg_available) failed on this host — refusing "
-            "the in-process ctypes hook (an ABI mismatch could kill the "
-            "executor, not raise). Unset the variable or use 'auto'."
-        )
-    return impl(data)
+    """The production JPEG decoder: the numpy twin, bit-identical to
+    :func:`_decode_jpeg_pure` (the reference)."""
+    return _decode_jpeg_numpy(data)
 
 
 def attach_jpeg_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -2699,13 +2349,10 @@ def encode_gif(width: int, height: int, pixel: "callable") -> bytes:
 
 
 def _gif_header(data: bytes) -> tuple[int, int, list[int], int]:
-    """Shared GIF87a/89a header walk: screen descriptor, global + local
+    """GIF87a/89a header walk: screen descriptor, global + local
     color tables folded to grayscale ((r+g+b)//3, the project's palette
     convention), extension skip, image descriptor. Returns (width,
-    height, gray palette, offset of the LZW min-code byte). Both the
-    pure decoder and the giflib hook use THIS parse so their guards
-    (not-a-GIF, missing descriptor, interlace) and palette arithmetic
-    are one code path."""
+    height, gray palette, offset of the LZW min-code byte)."""
     import struct
 
     if data[:6] not in (b"GIF87a", b"GIF89a"):
@@ -2804,176 +2451,6 @@ def _decode_gif(data: bytes) -> tuple[int, int, float]:
     px = [palette[i] for i in indices[: width * height]]
     mean = sum(px) / len(px) if px else 0.0
     return width, height, mean
-
-
-@functools.lru_cache(maxsize=1)
-def _giflib_available() -> bool:
-    """Hazard-gated probe for the system giflib hook: like the libjpeg
-    probe, run in a SUBPROCESS first — the hook defines giflib's public
-    structs in ctypes and dereferences the raster pointer, so a build
-    whose layout disagreed would fault; the probe spends a child
-    process proving byte-level agreement with the pure decoder before
-    any in-process use."""
-    import os
-    import subprocess
-    import sys
-
-    code = (
-        "import sys; sys.path.insert(0, %r)\n"
-        "from etl_sample_spark.operators import multimodal as mm\n"
-        "for dims in ((9, 7), (16, 16)):\n"
-        "    p = mm.encode_gif(*dims, lambda x, y: (x * 41 + y * 23) %% 256)\n"
-        "    assert mm._decode_gif_giflib(p) == mm._decode_gif(p)\n"
-        "print('ok')\n"
-    ) % (os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),)
-    try:
-        out = subprocess.run(
-            [sys.executable, "-c", code], capture_output=True, timeout=60
-        )
-        return out.returncode == 0 and b"ok" in out.stdout
-    except Exception:
-        return False
-
-
-def _decode_gif_giflib(data: bytes) -> tuple[int, int, float]:
-    """Native LZW twin of :func:`_decode_gif` via the SYSTEM giflib
-    (libgif.so.7, present in this container — no install), driven
-    through ctypes against giflib 5's PUBLIC structs (gif_lib.h ships
-    them; unlike libjpeg's private decompress struct the layout is part
-    of the API). The header/palette walk and the mean arithmetic are
-    the SHARED :func:`_gif_header` + the pure decoder's exact Python
-    expressions — only the serial LZW index decode is replaced by
-    ``DGifSlurp`` — so the result is EXACTLY equal (same ints, same
-    float ops), not merely close. giflib reports errors via return
-    codes (no exit()), but the struct definitions are deref-heavy, so
-    callers gate on the subprocess probe :func:`_giflib_available`."""
-    import ctypes
-
-    width, height, palette, _pos = _gif_header(data)  # shared guards
-
-    class GifImageDesc(ctypes.Structure):
-        _fields_ = [
-            ("Left", ctypes.c_int),
-            ("Top", ctypes.c_int),
-            ("Width", ctypes.c_int),
-            ("Height", ctypes.c_int),
-            ("Interlace", ctypes.c_bool),
-            ("ColorMap", ctypes.c_void_p),
-        ]
-
-    class SavedImage(ctypes.Structure):
-        _fields_ = [
-            ("ImageDesc", GifImageDesc),
-            ("RasterBits", ctypes.POINTER(ctypes.c_ubyte)),
-            ("ExtensionBlockCount", ctypes.c_int),
-            ("ExtensionBlocks", ctypes.c_void_p),
-        ]
-
-    class GifFileType(ctypes.Structure):
-        _fields_ = [
-            ("SWidth", ctypes.c_int),
-            ("SHeight", ctypes.c_int),
-            ("SColorResolution", ctypes.c_int),
-            ("SBackGroundColor", ctypes.c_int),
-            ("AspectByte", ctypes.c_ubyte),
-            ("SColorMap", ctypes.c_void_p),
-            ("ImageCount", ctypes.c_int),
-            ("Image", GifImageDesc),
-            ("SavedImages", ctypes.POINTER(SavedImage)),
-            ("ExtensionBlockCount", ctypes.c_int),
-            ("ExtensionBlocks", ctypes.c_void_p),
-            ("Error", ctypes.c_int),
-            ("UserData", ctypes.c_void_p),
-            ("Private", ctypes.c_void_p),
-        ]
-
-    gl = ctypes.CDLL("libgif.so.7")
-    gl.DGifOpen.restype = ctypes.POINTER(GifFileType)
-
-    state = {"off": 0}
-    READ_CB = ctypes.CFUNCTYPE(
-        ctypes.c_int, ctypes.c_void_p, ctypes.POINTER(ctypes.c_ubyte), ctypes.c_int
-    )
-
-    def _read(_gif, buf, want):
-        off = state["off"]
-        chunk = data[off : off + want]
-        ctypes.memmove(buf, chunk, len(chunk))
-        state["off"] = off + len(chunk)
-        return len(chunk)
-
-    cb = READ_CB(_read)
-    err = ctypes.c_int(0)
-    gif = gl.DGifOpen(None, cb, ctypes.byref(err))
-    if not gif:
-        raise ValueError(f"giflib rejected the GIF payload (error {err.value})")
-    try:
-        if gl.DGifSlurp(gif) != 1:  # GIF_OK
-            raise ValueError(f"giflib failed to decode (error {gif.contents.Error})")
-        g = gif.contents
-        if g.ImageCount < 1:
-            raise ValueError("no image descriptor")
-        first = g.SavedImages[0]
-        w, h = first.ImageDesc.Width, first.ImageDesc.Height
-        if (w, h) != (width, height):
-            raise ValueError("giflib image dims disagree with the header walk")
-        n = w * h
-        indices = ctypes.cast(
-            first.RasterBits, ctypes.POINTER(ctypes.c_ubyte * n)
-        ).contents
-        try:
-            import numpy as np
-
-            # exact-int gather + sum — identical value to the Python
-            # fold below (both are exact integer arithmetic), ~10x less
-            # tail time for big rasters
-            total = int(np.array(palette, dtype=np.int64)[np.frombuffer(indices, dtype=np.uint8)].sum())
-            mean = total / n if n else 0.0
-        except ImportError:
-            px = [palette[i] for i in indices]
-            mean = sum(px) / len(px) if px else 0.0
-        return width, height, mean
-    finally:
-        gl.DGifCloseFile(gif, ctypes.byref(err))
-
-
-# Decoder registry for the GIF payload path — same contract as the PNG
-# and JPEG registries: "auto"/"pure" keep the stdlib-only LZW decoder
-# (there is no numpy GIF twin: a variable-width LZW stream is a true
-# serial dependency with a growing dictionary); SPARK_GRAFT_GIF_DECODER
-# ="giflib" opts into the native hook (exact-equal results, see
-# _decode_gif_giflib).
-_GIF_IMPLS = {
-    "pure": _decode_gif,
-    "giflib": _decode_gif_giflib,
-}
-
-
-def _decode_gif_dispatch(data: bytes) -> tuple[int, int, float]:
-    import os
-
-    choice = os.environ.get("SPARK_GRAFT_GIF_DECODER", "auto")
-    if choice == "auto":
-        choice = "pure"
-    try:
-        impl = _GIF_IMPLS[choice]
-    except KeyError:
-        raise ValueError(
-            f"SPARK_GRAFT_GIF_DECODER={choice!r}: expected one of "
-            f"{sorted(_GIF_IMPLS)} or 'auto'"
-        ) from None
-    if choice == "giflib" and not _giflib_available():
-        # giflib's structs are deref-heavy; an ABI-disagreeing build
-        # corrupts memory rather than raising. Only the subprocess
-        # probe may authorize the in-process hook.
-        raise RuntimeError(
-            "SPARK_GRAFT_GIF_DECODER=giflib: the subprocess hazard "
-            "probe (_giflib_available) failed on this host — refusing "
-            "the in-process ctypes hook (a struct-layout mismatch could "
-            "corrupt the executor, not raise). Unset the variable or "
-            "use 'auto'."
-        )
-    return impl(data)
 
 
 def attach_gif_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -3296,7 +2773,7 @@ def _encode_ipdv_numpy(width: int, height: int, frames: list[bytes], gop: int = 
     P-frame equals the source frame identically ((p + (cur-p) mod 256)
     mod 256 == cur — the pure path's own "== cur" invariant), so
     ``prev`` advances to ``cur`` without materializing recon. Pinned by
-    tests/test_operators.py::test_ipdv_encoder_twins_bit_identical_and_env_selectable
+    tests/test_operators.py::test_ipdv_encoder_twins_bit_identical
     across dims × frame-counts × gops."""
     import struct
 
@@ -3364,35 +2841,11 @@ def _encode_ipdv_numpy(width: int, height: int, frames: list[bytes], gop: int = 
     return bytes(out)
 
 
-# Encoder registry, mirroring _JPEG_ENC_IMPLS: "auto" takes the numpy
-# twin (all-integer arithmetic, structurally bit-identical, test-pinned)
-# and falls back to pure when numpy is unavailable.
-_IPDV_ENC_IMPLS = {
-    "pure": _encode_ipdv_pure,
-    "numpy": _encode_ipdv_numpy,
-}
-
-
 def encode_ipdv(width: int, height: int, frames: list[bytes], gop: int = 4) -> bytes:
-    """I/P temporal compression — dispatches on
-    ``SPARK_GRAFT_IPDV_ENCODER`` (``auto``/``pure``/``numpy``; see
-    :func:`_encode_ipdv_pure` for the codec contract)."""
-    import os
-
-    choice = os.environ.get("SPARK_GRAFT_IPDV_ENCODER", "auto")
-    if choice == "auto":
-        try:
-            import numpy  # noqa: F401
-        except ImportError:
-            choice = "pure"
-        else:
-            choice = "numpy"
-    if choice not in _IPDV_ENC_IMPLS:
-        raise ValueError(
-            f"SPARK_GRAFT_IPDV_ENCODER={choice!r}: expected one of "
-            f"{sorted(_IPDV_ENC_IMPLS)} or 'auto'"
-        )
-    return _IPDV_ENC_IMPLS[choice](width, height, frames, gop)
+    """I/P temporal compression: the numpy twin, bit-identical to
+    :func:`_encode_ipdv_pure` (the reference; see it for the codec
+    contract)."""
+    return _encode_ipdv_numpy(width, height, frames, gop)
 
 
 def decode_ipdv(data: bytes) -> tuple[int, int, list[bytes]]:

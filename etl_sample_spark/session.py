@@ -18,6 +18,9 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
+# The directory that holds the etl_sample_spark package.
+_PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _cpus() -> str:
     return os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -58,6 +61,12 @@ def get_spark(app_name: str = "etl-sample-spark") -> SparkSession:
         # (correctness-neutral: codec never changes bytes' meaning).
         .config("spark.io.compression.codec", "zstd")
         .config("spark.io.compression.zstd.level", "3")
+        # Python workers (mapInPandas codecs, pandas UDFs) import this
+        # package. Local-mode workers inherit the driver's cwd, so without
+        # this they find it only when the driver runs from the package's
+        # parent. Spark merges the value into the worker PYTHONPATH; it
+        # adds no JVM-start work.
+        .config("spark.executorEnv.PYTHONPATH", _PKG_PARENT)
     )
     spark = builder.getOrCreate()
     tune(spark)

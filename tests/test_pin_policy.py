@@ -92,26 +92,38 @@ def test_rotation_orders_never_checked_then_stalest():
 
 
 def test_fingerprint_sees_through_dispatch_registries():
-    """r13 self-found enforcement hole: a decoder twin referenced only
-    through a dispatch dict (``_JPEG_IMPLS = {"numpy": _decode_jpeg_numpy}``)
-    was invisible to the fingerprint — the dict's repr embeds function
-    addresses, so the address guard dropped the constant wholesale and
-    its values were never walked. An edit to a registry-dispatched twin
-    then left every reaching query's fingerprint unchanged: exactly the
-    helper-edit class this policy exists to catch. Pin that container
-    constants now contribute (a) their contained callables by SOURCE and
-    (b) an address-scrubbed structural repr."""
+    """A helper referenced only through a container constant (a dispatch
+    registry like ``_IMPLS = {"numpy": _decode_numpy}``) must still be
+    fingerprinted by SOURCE: the container's repr embeds function
+    addresses, so a walk that only scrubs or drops that repr would leave
+    every reaching query's fingerprint unchanged by an edit to the
+    helper — exactly the helper-edit class this policy exists to catch.
+    Pin (a) that callables and modules inside nested dict/tuple/list/set
+    constants are handed to the walk, and (b) that a real multimodal
+    query's fingerprint covers its codec twins with no address-bearing
+    (run-flapping) part."""
     sys.path.insert(0, os.path.join(ROOT, "tools"))
     import pinfp
 
+    from etl_sample_spark.operators import multimodal as mm
     from etl_sample_spark.plans import REGISTRY
+
+    registry = {
+        "numpy": mm._decode_jpeg_numpy,
+        "nested": (mm._png_raw_numpy, [frozenset({mm._decode_gif})]),
+        "module": mm,
+        "plain": ("pure", 3, 1.5, None),
+    }
+    found = pinfp._contained_objects(registry)
+    for want in (mm._decode_jpeg_numpy, mm._png_raw_numpy, mm._decode_gif, mm):
+        assert any(f is want for f in found), f"container walk lost {want!r}"
+    assert all(callable(f) or f is mm for f in found), found
 
     parts = pinfp._fingerprint_parts(REGISTRY["multimodal_jpeg_decode"])
     prefixes = {p.split("::", 1)[0] for p in parts}
     for want in (
         "src:etl_sample_spark.operators.multimodal._decode_jpeg_numpy",
         "src:etl_sample_spark.operators.multimodal._png_raw_numpy",
-        "const:etl_sample_spark.operators.multimodal._JPEG_IMPLS",
     ):
         assert want in prefixes, f"fingerprint lost {want}"
     # the scrub must keep reprs stable: no raw addresses may survive

@@ -101,13 +101,12 @@ def _safe_source(obj) -> str:
 def _contained_objects(val) -> list:
     """Modules/callables held INSIDE container constants (depth-bounded).
 
-    r13 self-found enforcement hole: a dispatch registry like
-    ``_JPEG_IMPLS = {"numpy": _decode_jpeg_numpy, ...}`` is a dict
-    constant whose repr embeds function addresses, so the address guard
-    dropped it wholesale AND its values were never pushed on the walk
-    stack — an edit to a registry-dispatched twin left every reaching
-    query's fingerprint unchanged, which is exactly the helper-edit
-    class this module exists to catch. Containers now contribute their
+    A dispatch registry like ``_IMPLS = {"numpy": _decode_numpy, ...}``
+    is a dict constant whose repr embeds function addresses. A walk that
+    only scrubs or drops that repr, without pushing the values on the
+    walk stack, leaves every reaching query's fingerprint unchanged by
+    an edit to a registry-dispatched helper — exactly the helper-edit
+    class this module exists to catch. So containers contribute their
     contained callables/modules to the closure."""
     out = []
     stack = [(val, 0)]
@@ -177,7 +176,7 @@ def _fingerprint_parts(spec) -> set:
             elif isinstance(val, _SIMPLE):
                 # dispatch registries and other containers may hold
                 # callables — fingerprint those by SOURCE via the walk
-                # stack (r13: _JPEG_IMPLS/_PNG_RAW_IMPLS were invisible)
+                # stack, or a helper reached only through one is invisible
                 stack.extend(_contained_objects(val))
                 if isinstance(val, (set, frozenset)):
                     # set iteration order varies with hash randomization —
