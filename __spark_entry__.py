@@ -34,83 +34,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # The driver's CORRECTNESS run covers the first 50 queries() entries per
-# round. Ordering policy (r7 VERDICT items 4+5, mechanized):
-#   1. _FRONT_PINS — every query whose reachable code changed since its
-#      last driver-grade check (enforced by tools/update_pin_manifest.py
-#      + tests/test_pin_policy.py, which refuse dirty-but-unpinned
-#      queries), plus never-checked new registrations.
-#   2. The rest, OLDEST DRIVER ROW FIRST — computed from the
-#      CORRECTNESS_r*.json artifacts at the repo root, so the whole
-#      registry's driver evidence converges to recent rounds instead of
-#      37 queries sitting on their r1 rows forever.
-_FRONT_PINS = [
-    # r17 optimization round: every query whose code closure changed.
-    #
-    # Multimodal codec tier (operators/multimodal.py): synthesis inputs
-    # hash-repartition across cores before the mapInPandas codec stage
-    # (_spread_ids). Each format calls ONE production codec directly —
-    # the numpy twins for PNG/JPEG decode and the JPEG + IPDV encoders
-    # (bit-identical to the pure reference twins: shared entropy/RLE
-    # coder, replayed float op order; pinned in
-    # test_operators.py::test_*_twins_bit_identical), the pure LZW
-    # decoder for GIF; the env-selected tiers and their dispatch
-    # registries are gone. Every dirtied query below strict-sim
-    # re-verified at sf0.01 AND sf0.1.
-    "multimodal_bmp_decode",
-    "multimodal_gif_decode",
-    "multimodal_image_features",
-    "multimodal_jpeg_color_decode",
-    "multimodal_jpeg_decode",
-    "multimodal_mjpeg_framesample",
-    "multimodal_png_decode",
-    "multimodal_resize_stats",
-    "multimodal_video_delta_decode",
-    "multimodal_video_framesample",
-    "multimodal_wav_decode",
-    # operators/similarity.py embedding_near_duplicates: the threshold
-    # predicate now rides LAST in the explicit join condition (the
-    # pushed-filter form ran the pair fold before the cheap id<
-    # conjunct — on ~2× the pairs); strict-sim green at sf0.01+sf0.1.
-    "embedding_neardup_pairs",
-    # Label-propagation fixpoint (operators/dedup.py): the per-round
-    # convergence check is now a monotone-sum aggregate for integral
-    # ids (join-based check retained for string labels) — fixpoint
-    # results identical, strict-sim re-verified.
-    "embedding_neardup_clusters",
-    "entity_resolution_part_names",
-    "neardup_clusters_documents",
-    "semantic_dedup_keep_best",
-    # dedup.py module-source neighbors whose closure fingerprint moved
-    # with the file edit (no behavior change in their own operators):
-    "simhash_cluster_assign",
-    # PQ codebooks (operators/similarity.py) moved from literal
-    # expression trees into a one-row broadcast relation; codes are
-    # bit-identical (same fold over the same doubles) — strict-sim
-    # re-verified.
-    "similarity_pq_adc_top10",
-    "similarity_pq_rerank_top10",
-    # functions/text.py docstring gained the shingles/n invariant note
-    # (comment-only, but closure fingerprints are source-exact):
-    "text_repetition_ratio",
-    # operators/ranks.py: the occupied-bucket grid is now pinned (it
-    # feeds the prefix and totals branches; unpinned it re-aggregated
-    # per branch). Ranks/tiles identical (test_ranks.py equivalences +
-    # strict-sim); gini -32% / abc -22% at 5-rep A/B.
-    "abc_pareto_classification",
-    "gini_revenue_concentration",
-    "ks_two_sample_click_vs_purchase",
-    "rfm_customer_scores",
-]
-# The r16 pins all landed green rows in CORRECTNESS_r16.json (50/50)
-# and rotate out; the 19 r17 pins above leave ~31 window slots for the
-# stalest driver rows (_ordered() fills them oldest-first). The r17
-# catalog.py schema-memo key hardening (directory-layout mtime) reaches
-# ALL 239 closures — the same uniform-infrastructure situation as the
-# r16 schema memo itself: the manifest was force-updated and the FULL
-# registry re-verified this session under DRIVE_STRICT=1 (bit-level
-# floats, vanilla session, DuckDB oracle) as the substitute evidence.
-# tools/update_pin_manifest.py enforces that every further r17 code
-# change either lands here or leaves its queries' fingerprints alone.
+# round, so the order is derived, never hand-kept: first every query whose
+# code changed since its last driver row (its round stamp in
+# tools/pin_manifest.json, written by tools/update_pin_manifest.py, is newer
+# than that row; a query missing from the manifest counts as changed), then
+# the rest; within each group the oldest driver row first, ties in registry
+# order. Changed queries beyond 50 wait stalest-first for the next round.
 
 
 def _last_checked_rounds() -> dict[str, int]:
@@ -136,16 +65,28 @@ def _last_checked_rounds() -> dict[str, int]:
     return last
 
 
+def _manifest_rounds() -> dict[str, int]:
+    """name -> round its current fingerprint was first accepted."""
+    import json
+
+    here = os.path.dirname(os.path.abspath(__file__))
+    try:
+        with open(os.path.join(here, "tools", "pin_manifest.json")) as f:
+            return {name: e["round"] for name, e in json.load(f).items()}
+    except (OSError, ValueError):
+        return {}
+
+
 def _ordered() -> list[str]:
-    names = list(REGISTRY)
-    order = {n: i for i, n in enumerate(names)}
-    pins = [n for n in _FRONT_PINS if n in names]
     last = _last_checked_rounds()
-    rest = sorted(
-        (n for n in names if n not in pins),
-        key=lambda n: (last.get(n, 0), order[n]),
-    )
-    return pins + rest
+    stamp = _manifest_rounds()
+    index = {n: i for i, n in enumerate(REGISTRY)}
+
+    def key(n: str) -> tuple[bool, int, int]:
+        changed = n not in stamp or stamp[n] > last.get(n, 0)
+        return (not changed, last.get(n, 0), index[n])
+
+    return sorted(REGISTRY, key=key)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

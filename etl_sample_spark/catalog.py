@@ -70,9 +70,11 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # rewritten IN PLACE changes neither the directory's mtime
             # nor its size, so key on the newest direct entry's mtime +
             # the entry count instead. One scandir per table() call is
-            # ~the cost of the os.stat above; nested partition dirs
-            # bubble up because overwriting a partition updates its
-            # directory entry's mtime.
+            # ~the cost of the os.stat above. KNOWN LIMIT: only direct
+            # entries are read. A partition subdirectory's mtime moves
+            # when files are created or removed in it, not when one is
+            # rewritten in place, so an in-place rewrite below a
+            # partition subdirectory keeps the old key (and schema).
             newest = st.st_mtime_ns
             n = 0
             with os.scandir(path) as it:

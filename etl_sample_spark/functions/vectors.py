@@ -1,10 +1,13 @@
 """Vector math over array<float|double> columns, JVM-side.
 
-Built on higher-order functions (``zip_with`` + ``aggregate``) so the dot
-product runs inside codegen — no Python, no UDF serialization — which is
-the difference between feasible and infeasible at 100 TB. (A vectorized
-pandas_udf variant is a fallback for very wide vectors; at dim≈64-1024 the
-JVM expression wins because it avoids Arrow round-trips.)
+Built on higher-order functions (``zip_with`` + ``aggregate``), so the
+dot product runs on the JVM: no Python worker, no UDF serialization, no
+Arrow round-trip, which is the difference between feasible and
+infeasible at 100 TB. Both are CodegenFallback expressions, so they do
+NOT run inside whole-stage codegen: the Project that evaluates them
+carries no ``*(n)`` prefix in the executed plan, and each row's fold
+goes through the interpreted lambda (pinned by
+``tests/test_udfs.py::test_dot_runs_on_the_jvm_outside_whole_stage_codegen``).
 """
 
 from __future__ import annotations

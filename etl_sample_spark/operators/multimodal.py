@@ -24,10 +24,11 @@ tested. The codec tier is split:
   The ``attach_*_media`` helpers synthesize genuine payloads (a different
   PNG filter on every scanline, Huffman-coded JPEG) to drive every path.
 - Compressed VIDEO codecs (H.264 etc.) stay STUBBED (patent-encumbered
-  bitstream formats, no codec libs here): ``decode_image(..., fake=False)``
-  raises ``NotImplementedError`` for unknown formats, and ``fake=True``
-  produces a deterministic fake decode so batch shapes and schemas are
-  exercised regardless.
+  bitstream formats, no codec libs here). ``decode_image(..., fake=False)``
+  decodes BMP, PNG, baseline JPEG and GIF and raises
+  ``NotImplementedError`` for any other format; ``fake=True`` produces a
+  deterministic fake decode so batch shapes and schemas are exercised
+  regardless.
 
 Scale notes: media bytes dominate row width, so operators here
 (1) never shuffle the binary column, (2) use ``mapInPandas`` (streaming
@@ -457,9 +458,10 @@ def decode_image(media: DataFrame, fake: bool = False) -> DataFrame:
                     mean = sum(payload) / len(payload) if payload else 0.0
                 else:
                     raise NotImplementedError(
-                        "only BMP/PNG/baseline-JPEG decode natively here (no "
-                        "codec libs in this environment); pass fake=True to "
-                        "exercise the plumbing with a deterministic fake decoder"
+                        f"cannot decode format {fmt!r}: only BMP, PNG, "
+                        "baseline JPEG and GIF decode natively here (no codec "
+                        "libs); pass fake=True to exercise the plumbing with a "
+                        "deterministic fake decoder"
                     )
                 rows["doc_id"].append(int(r["doc_id"]))
                 rows["width"].append(w)

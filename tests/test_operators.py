@@ -1001,6 +1001,28 @@ def test_codec_env_variables_are_inert(monkeypatch):
     assert got == want
 
 
+def test_decode_image_names_every_native_format_when_it_refuses():
+    """An unknown format (without ``fake=True``) raises, and the message
+    names all four natively decoded formats — GIF included — and the
+    format it got. Runs the captured ``mapInPandas`` function in-process
+    like ``test_codec_env_variables_are_inert``."""
+    import pandas as pd
+
+    from etl_sample_spark.operators import multimodal as mm
+
+    class _Captured:
+        def mapInPandas(self, fn, schema):
+            return fn
+
+    decode = mm.decode_image(_Captured())
+    pdf = pd.DataFrame({"doc_id": [1], "media_bytes": [b"RIFF0000WEBP"], "media_meta": [{"format": "webp"}]})
+    with pytest.raises(NotImplementedError) as err:
+        list(decode(iter([pdf])))
+    msg = str(err.value)
+    for fmt in ("BMP", "PNG", "baseline JPEG", "GIF", "'webp'"):
+        assert fmt in msg, msg
+
+
 def test_multimodal_query_runs_from_a_foreign_cwd(sf_dir, tmp_path):
     """Python workers must import etl_sample_spark whatever the driver's
     cwd: local-mode workers inherit that cwd, so a session started from

@@ -414,20 +414,6 @@ def test_no_accidental_cartesian_or_nlj(spark, sf_dir, no_pin, name):
         assert "BroadcastNestedLoopJoin" not in plan, f"{name} plans a nested-loop join"
 
 
-def test_front_pins_and_window_discipline():
-    """Every _FRONT_PINS name must exist in the registry (a typo would
-    silently drop the query out of the driver's re-check window), pins
-    must be unique, and the ordered list must lead with them."""
-    import __spark_entry__ as e
-
-    missing = [n for n in e._FRONT_PINS if n not in REGISTRY]
-    assert not missing, f"pinned but not registered: {missing}"
-    assert len(e._FRONT_PINS) == len(set(e._FRONT_PINS)), "duplicate pins"
-    ordered = e._ordered()
-    assert ordered[: len(e._FRONT_PINS)] == e._FRONT_PINS
-    assert len(e._FRONT_PINS) <= 50, "pins overflow the driver's 50-query window"
-
-
 def test_bench_headline_names_are_registered():
     """bench.py's HEADLINE set must resolve against the registry — a
     renamed query would otherwise break the driver's per-round bench."""

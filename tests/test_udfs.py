@@ -123,6 +123,24 @@ def test_cosine_similarity_zero_vector_is_null_not_crash(spark):
     assert got[2].c is None
 
 
+def test_dot_runs_on_the_jvm_outside_whole_stage_codegen(spark):
+    """``dot`` is ``zip_with`` + ``aggregate``: JVM expressions (no Python
+    node in the plan) that are CodegenFallback, so the Project computing
+    them carries no ``*(n)`` whole-stage prefix while the Filter below
+    it still does — as the ``functions/vectors.py`` docstring says."""
+    from etl_sample_spark.functions.vectors import dot
+
+    df = spark.createDataFrame([(1, [1.0, 2.0], [3.0, 4.0])], "id INT, a ARRAY<DOUBLE>, b ARRAY<DOUBLE>")
+    out = df.where("id > 0").select("id", dot(F.col("a"), F.col("b")).alias("d"))
+    assert out.collect()[0].d == 11.0
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    lines = plan.splitlines()
+    (project,) = [ln for ln in lines if "Project" in ln]
+    assert "aggregate(zip_with(" in project and not project.lstrip(" +-:").startswith("*("), plan
+    assert any(ln.lstrip(" +-:").startswith("*(") and "Filter" in ln for ln in lines), plan
+    assert "Python" not in plan and "ArrowEval" not in plan, plan
+
+
 def test_redact_pii_full_ten_digit_phone(spark):
     """r11 review regression: the bare ddd-dddd pattern left the area
     code of a standard 10-digit number unredacted ('555-<PHONE>')."""

@@ -1,18 +1,13 @@
-"""Refresh tools/pin_manifest.json — REFUSING unpinned dirty queries.
+"""Refresh tools/pin_manifest.json: a fingerprint and a round stamp per query.
 
-Workflow (the mechanical form of the re-pin policy):
-
-1. Edit engine code.
-2. Run ``python tools/update_pin_manifest.py``. Any query whose
-   fingerprint changed (or that is new) and is NOT in
-   ``__spark_entry__._FRONT_PINS`` is listed and the manifest is NOT
-   written — add those names to ``_FRONT_PINS`` first.
-3. Re-run; the manifest is rewritten at the state the driver will check
-   at round end.
-
-``--force`` bypasses the pin check (bootstrap / post-driver-round
-rotation when pins are being cleared for queries whose green rows just
-landed).
+Run ``python tools/update_pin_manifest.py`` after any engine edit
+(``tests/test_pin_policy.py`` fails until the manifest is current). It
+recomputes every registry query's fingerprint (``tools/pinfp.py``). A
+changed or new fingerprint is stamped with the next driver round, one
+past the newest ``CORRECTNESS_rN.json`` at the repo root; every other
+entry keeps its stamp. ``__spark_entry__._ordered()`` leads the driver's
+window with every query stamped after its last driver row, so the
+queries an edit touched are re-checked without a hand-kept list.
 """
 
 from __future__ import annotations
@@ -26,31 +21,36 @@ MANIFEST = os.path.join(HERE, "pin_manifest.json")
 
 sys.path.insert(0, os.path.dirname(HERE))
 
+from __spark_entry__ import _last_checked_rounds  # noqa: E402
 from tools.pinfp import all_fingerprints  # noqa: E402
 
 
+def write_manifest(manifest: dict[str, dict]) -> None:
+    """One ``"name": {"fp": ..., "round": ...}`` line per query, sorted."""
+    lines = [f"{json.dumps(n)}: {json.dumps(manifest[n], sort_keys=True)}" for n in sorted(manifest)]
+    with open(MANIFEST, "w") as f:
+        f.write("{\n" + ",\n".join(lines) + "\n}\n")
+
+
 def main() -> int:
-    force = "--force" in sys.argv
     current = all_fingerprints()
     old = {}
     if os.path.exists(MANIFEST):
-        old = json.load(open(MANIFEST))
+        with open(MANIFEST) as f:
+            old = json.load(f)
+    next_round = 1 + max(_last_checked_rounds().values(), default=0)
 
-    from __spark_entry__ import _FRONT_PINS
-
-    dirty = [n for n, fp in current.items() if old.get(n) != fp]
-    unpinned = [n for n in dirty if n not in _FRONT_PINS]
-    if unpinned and not force:
-        print("REFUSED: fingerprint changed (or new) but not in _FRONT_PINS:")
-        for n in unpinned:
-            print(f"  - {n}" + ("  (new)" if n not in old else ""))
-        print("Add them to __spark_entry__._FRONT_PINS, then re-run.")
-        return 1
-
-    with open(MANIFEST, "w") as f:
-        json.dump(current, f, indent=0, sort_keys=True)
-        f.write("\n")
-    print(f"wrote {MANIFEST}: {len(current)} queries, {len(dirty)} updated")
+    manifest, updated = {}, []
+    for name, fp in current.items():
+        entry = old.get(name)
+        if entry is None or entry["fp"] != fp:
+            entry = {"fp": fp, "round": next_round}
+            updated.append(name)
+        manifest[name] = entry
+    write_manifest(manifest)
+    print(f"wrote {MANIFEST}: {len(manifest)} queries, {len(updated)} updated (round {next_round})")
+    for name in sorted(updated):
+        print(f"  - {name}")
     return 0
 
 
