@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from etl_sample_spark.pinning import pin as _branch_pin
+from etl_sample_spark.pinning import pin
 
 MINHASH_PRIME = 2_147_483_647  # 2^31 - 1
 # (a, b) parameters of the k=4 universal-hash family used for MinHash.
@@ -433,8 +433,8 @@ def simhash_cluster_assign(
     # executed plan. Pinned, the corpus is scanned ONCE; everything
     # downstream reads (id, simhash) rows (n × ~16 bytes) or the
     # ≤ 2^bits distinct-signature set.
-    sig = _branch_pin(simhash_df(df, text_col, id_col, bits=bits))
-    sv = _branch_pin(sig.select("simhash").distinct())
+    sig = pin(simhash_df(df, text_col, id_col, bits=bits))
+    sv = pin(sig.select("simhash").distinct())
 
     # Banded pair generation over DISTINCT signatures — identical
     # pigeonhole construction to simhash_near_duplicates, but the join
@@ -546,9 +546,7 @@ def ngram_jaccard_pairs(
     )
 
 
-def neardup_clusters(
-    pairs: DataFrame, max_iters: int = 10, checkpoint_dir: str | None = None
-) -> DataFrame:
+def neardup_clusters(pairs: DataFrame, max_iters: int = 10) -> DataFrame:
     """Connected components over near-duplicate candidate pairs → cluster
     id per doc (min doc_id in the component): the step that turns
     pairwise similarity into the actual dedup decision (keep one doc per
@@ -593,22 +591,12 @@ def neardup_clusters(
     cluster id among its non-null partners (null if it has none); a null
     never links its partners to each other.
 
-    Checkpoint modes: by default each pass pins its result with
-    ``localCheckpoint`` (executor-local blocks — fast, but LOST if an
-    executor dies, which fails the job on a real cluster). Pass
-    ``checkpoint_dir`` to use reliable ``checkpoint()`` into that
-    (HDFS/object-store) directory instead: each pass's state survives
-    executor loss at the price of a write per pass. local[*] tests run
-    both; clusters should always set it.
+    Lineage: each pass cuts its result with an eager
+    ``localCheckpoint``, so pass i's plan never carries passes 0..i-1.
+    This cut is the algorithm's, not a branch-sharing pin: it is not
+    routed through ``pinning.pin`` and the ``SPARK_GRAFT_NO_PIN`` seam
+    does not disable it.
     """
-    if checkpoint_dir is not None:
-        pairs.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def _pin(df: DataFrame) -> DataFrame:
-        if checkpoint_dir is not None:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
     u, v, lo, first = (F.col(c) for c in ("u", "v", "lo", "first"))
     star_min = F.least(u, lo)  # min of u's closed neighbourhood
 
@@ -643,7 +631,7 @@ def neardup_clusters(
             ).alias("e")
         ).select("e.u", "e.v")
         seen = Observation()
-        large = _pin(
+        large = (
             _star(both)
             .observe(
                 seen,
@@ -651,6 +639,7 @@ def neardup_clusters(
                 F.count_if(first & u.isNull()).alias("null_ids"),
             )
             .select("u", "v", "lo", "first")
+            .localCheckpoint(eager=True)
         )
         stats = seen.get
         if i == 0 and stats["null_ids"]:

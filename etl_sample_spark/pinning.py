@@ -5,33 +5,21 @@ Spark re-executes a DataFrame's lineage once per downstream plan branch
 bounded derived relation into several joins/aggregates re-scans its
 source table — and re-runs every map in between — once per branch
 (``tools/scan_audit.py`` makes the pattern mechanical to find; r15 fixed
-the 25 worst shapes). Every such pin now routes through :func:`pin` so
-the materialization strategy and its trade-offs are a SINGLE decision
-instead of 25 scattered call sites:
+the 25 worst shapes). Every such pin routes through :func:`pin`, and
+:func:`pin` has one policy: ``localCheckpoint``. It materializes the
+subtree as executor-local RDD blocks and cuts lineage there; it beat
+``persist`` on every representative query at sf0.1 and at the 10× tier
+(SCALE.md's r16 entry). The blocks are ContextCleaner-collected once the
+result DataFrame is garbage-collected, so a long many-query session does
+not accumulate them. Losing an executor mid-query would fail the job
+rather than recompute the lost blocks; ``session.get_spark`` builds
+``local[N]`` sessions only, whose one executor is the driver JVM.
 
-* ``checkpoint`` (default): ``localCheckpoint`` — materializes the
-  subtree as executor-local RDD blocks and cuts lineage there. The
-  blocks are ContextCleaner-collected once the result DataFrame is
-  garbage-collected, so a long many-query session does not accumulate
-  them. The trade: lineage is TRUNCATED, so on a real cluster losing an
-  executor mid-query fails the job (the app layer retries the whole
-  query) instead of recomputing the lost blocks.
-* ``persist``: ``persist(StorageLevel.MEMORY_AND_DISK)`` — the same
-  branch-sharing with lineage KEPT: executor loss recomputes only the
-  lost partitions, the cluster-resilient choice. The trade: Dataset
-  caches are held by the session's CacheManager until an explicit
-  unpersist/clearCache (they are NOT GC-collected), so a long-lived
-  session accumulates every pinned relation; callers that loop over
-  many queries in one session should ``spark.catalog.clearCache()``
-  between queries, or prefer the default mode.
-* ``reliable``: ``checkpoint()`` into ``sparkContext`` 's configured
-  checkpoint directory (must be set): survives executor loss AND
-  truncates lineage, at the price of one reliable-store write per pin —
-  the belt-and-braces mode for long multi-stage cluster jobs.
+The cost that shapes WHERE to pin: a checkpointed relation is a
+stats-OPAQUE ``LogicalRDD`` (see :func:`pin`).
 
-Mode is selected by ``SPARK_GRAFT_PIN_MODE`` (default ``checkpoint``;
-measured head-to-head in SCALE.md's r16 entry). ``SPARK_GRAFT_NO_PIN=1``
-turns :func:`pin` into the identity: the registry-wide plan guards
+``SPARK_GRAFT_NO_PIN=1`` turns :func:`pin` into the identity — a test
+seam, not a tuning knob: the registry-wide plan guards
 (tests/test_plans.py) build every query with pins disabled, so a
 row-UDF, corpus-global window, or accidental cartesian upstream of a pin
 stays visible to them — r15's pinned subtrees were opaque ``LogicalRDD``
@@ -54,12 +42,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame
-from pyspark.storagelevel import StorageLevel
-
-_MODES = ("checkpoint", "persist", "reliable")
 
 
-def pin(df: DataFrame, *, eager: bool = False) -> DataFrame:
+def pin(df: DataFrame) -> DataFrame:
     """Materialize a bounded, branch-shared derived relation once.
 
     Call this ONLY on relations that are (a) consumed by two or more
@@ -78,20 +63,8 @@ def pin(df: DataFrame, *, eager: bool = False) -> DataFrame:
     (pinning the minhash LSH pair list cost 1.4× at sf0.1 through
     exactly this mechanism before r16 unpinned it).
 
-    ``eager=True`` runs the materialization job immediately (useful when
-    the caller's very next step is a multi-branch fan-out and deferred
-    first-touch cost would land inside a timed region); the default
-    defers it to the first action.
+    The materialization job runs at the first action on the result.
     """
     if os.environ.get("SPARK_GRAFT_NO_PIN") == "1":
         return df
-    mode = os.environ.get("SPARK_GRAFT_PIN_MODE", "checkpoint")
-    if mode == "persist":
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
-    if mode == "reliable":
-        return df.checkpoint(eager=eager)
-    if mode != "checkpoint":
-        raise ValueError(
-            f"SPARK_GRAFT_PIN_MODE={mode!r} not in {_MODES}"
-        )
-    return df.localCheckpoint(eager=eager)
+    return df.localCheckpoint(eager=False)

@@ -7,9 +7,14 @@ appends, ``Sample-Json-to-SQL-Full-Pipeline-EO-10-03-2019.py:28,807-816``).
 Multi-output single-pass (SURVEY §4): the reference fans one document out
 to 22 sink calls; in Spark each table write is an action, so the callers
 cache the shared document scan once — without it the JSON corpus would
-be re-read per table. ``pipeline.run_batch_pipeline`` caches each form's
-raw parse, and ``streaming.ingest.foreach_batch_normalize`` each
-micro-batch.
+be re-read per table. The writers here take the tables only: caching is
+the caller's, because the caller knows the scan's lifetime.
+``pipeline.run_batch_pipeline`` caches each form's raw parse, and
+``streaming.ingest.foreach_batch_normalize`` each micro-batch.
+
+Directory rewrites (erasure, compaction, rollup maintenance, the SCD2
+stream sink) install their new copy through ``swap_parquet_dir``, the
+one rename swap here.
 """
 
 from __future__ import annotations
@@ -38,25 +43,15 @@ def stringify_complex_columns(df: DataFrame) -> DataFrame:
 
 
 def write_parquet_tables(
-    tables: dict[str, DataFrame], base_dir: str, mode: str = "append", cache_source: DataFrame | None = None
+    tables: dict[str, DataFrame], base_dir: str, mode: str = "append"
 ) -> dict[str, str]:
-    """Write every normalized table under ``base_dir/<name>``.
-
-    ``cache_source``: the shared document scan; cached before the first
-    action and released after the last so the corpus is read once.
-    """
-    if cache_source is not None:
-        cache_source.cache()
-    try:
-        paths = {}
-        for name, df in tables.items():
-            path = os.path.join(base_dir, name)
-            df.write.mode(mode).parquet(path)
-            paths[name] = path
-        return paths
-    finally:
-        if cache_source is not None:
-            cache_source.unpersist()
+    """Write every normalized table under ``base_dir/<name>``."""
+    paths = {}
+    for name, df in tables.items():
+        path = os.path.join(base_dir, name)
+        df.write.mode(mode).parquet(path)
+        paths[name] = path
+    return paths
 
 
 def write_jdbc_tables(
@@ -65,25 +60,18 @@ def write_jdbc_tables(
     db_schema: str = "sample_main",
     mode: str = "append",
     options: dict[str, str] | None = None,
-    cache_source: DataFrame | None = None,
 ) -> None:
     """JDBC append sink: ``df.write.jdbc`` opens one connection per
     partition on the executors (the reference opened one SQLAlchemy
     engine per table on its single node, :662). ``createTableOptions``/
     credentials ride in ``options``. Complex columns are JSON-encoded at
     this boundary only."""
-    if cache_source is not None:
-        cache_source.cache()
-    try:
-        for name, df in tables.items():
-            writer = stringify_complex_columns(df).write.format("jdbc").mode(mode)
-            writer = writer.option("url", url).option("dbtable", f"{db_schema}.{name}")
-            for k, v in (options or {}).items():
-                writer = writer.option(k, v)
-            writer.save()
-    finally:
-        if cache_source is not None:
-            cache_source.unpersist()
+    for name, df in tables.items():
+        writer = stringify_complex_columns(df).write.format("jdbc").mode(mode)
+        writer = writer.option("url", url).option("dbtable", f"{db_schema}.{name}")
+        for k, v in (options or {}).items():
+            writer = writer.option(k, v)
+        writer.save()
 
 
 def idempotent_append(df: DataFrame, path: str, keys: list[str]) -> None:
@@ -281,20 +269,20 @@ def write_partitioned(
 def swap_parquet_dir(tmp: str, path: str) -> None:
     """Install the directory at ``tmp`` as ``path`` via rename swap —
     the shared write-and-swap tail for the right-to-erasure rewrite,
-    rollup maintenance and the streaming SCD2 sink (previously inline
-    copies with diverging failure behavior; ``compact_parquet_table``
-    keeps its own stricter variant, which RAISES if the post-swap
-    cleanup of the old copy fails).
+    compaction, rollup maintenance and the streaming SCD2 sink.
 
     Contract (local/POSIX only — object stores need a table format's
     rewrite): if ``path`` exists it is moved aside, ``tmp`` is renamed
     into place, and the old copy is removed; if the second rename fails
     the original is RESTORED before raising, so a caller never loses the
-    previous table. First write (``path`` absent) is a plain rename —
-    but a stale ``<path>__old_*`` leftover next to an absent ``path``
-    means a previous swap crashed mid-window, and installing ``tmp`` as
-    if this were a first write would silently discard that history, so
-    it raises with recovery instructions instead.
+    previous table. If the old copy survives its removal, this RAISES
+    naming it: the new table is already live, but the old bytes are
+    still on disk — for an erasure, the erased rows. First write
+    (``path`` absent) is a plain rename — but a stale ``<path>__old_*``
+    leftover next to an absent ``path`` means a previous swap crashed
+    mid-window, and installing ``tmp`` as if this were a first write
+    would silently discard that history, so it raises with recovery
+    instructions instead.
     """
     import glob as _glob
     import shutil
@@ -321,6 +309,11 @@ def swap_parquet_dir(tmp: str, path: str) -> None:
             f"left at {tmp}"
         ) from ex
     shutil.rmtree(old, ignore_errors=True)
+    if os.path.exists(old):
+        raise RuntimeError(
+            f"new table is live at {path}, but the previous copy could not "
+            f"be removed and remains at {old} — delete it manually"
+        )
 
 
 def compact_parquet_table(
@@ -349,12 +342,11 @@ def compact_parquet_table(
     compact copy sits at ``<path>__compact_<hex>``). Between the two
     renames there is a brief window where the canonical path is absent and
     the data lives at ``<path>__old_<hex>``; a crash there requires the
-    manual recovery of renaming that directory back. Failures after the
-    swap raise with the stranded directory named, so nothing is lost
-    silently.
+    manual recovery of renaming that directory back. The swap is
+    ``swap_parquet_dir``'s, so a failed cleanup after it raises with the
+    stranded directory named, and nothing is lost silently.
     """
     import math
-    import shutil
     import uuid
 
     df = spark.read.parquet(path)
@@ -374,23 +366,7 @@ def compact_parquet_table(
         if compression:
             writer = writer.option("compression", compression)
         writer.parquet(tmp)
-    old = f"{path}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
-    try:
-        os.rename(tmp, path)
-    except OSError as ex:
-        os.rename(old, path)  # restore the original on failure
-        raise RuntimeError(
-            f"compaction swap failed; original table restored at {path}, "
-            f"compacted copy left at {tmp}"
-        ) from ex
-    try:
-        shutil.rmtree(old)
-    except OSError as ex:
-        raise RuntimeError(
-            f"compacted table is live at {path}, but the pre-compact copy "
-            f"could not be removed and remains at {old} — delete it manually"
-        ) from ex
+    swap_parquet_dir(tmp, path)
     return n_rows
 
 

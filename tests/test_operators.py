@@ -1165,26 +1165,6 @@ def test_neardup_clusters_transitive_closure(spark):
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
-def test_neardup_clusters_reliable_checkpoint(spark, tmp_path):
-    """checkpoint_dir mode must produce identical clusters while writing
-    per-round state into the reliable checkpoint directory (the mode a
-    real cluster needs — localCheckpoint blocks die with their executor)."""
-    import os
-
-    from etl_sample_spark.operators.dedup import neardup_clusters
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11)], "a_id BIGINT, b_id BIGINT"
-    )
-    ckpt = str(tmp_path / "ckpt")
-    got = {
-        r["doc_id"]: r["cluster_id"]
-        for r in neardup_clusters(pairs, checkpoint_dir=ckpt).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
-    assert os.listdir(ckpt), "reliable checkpoint directory was never written"
-
-
 def test_batch_topk_matches_per_query_bruteforce(spark, sf_dir):
     from etl_sample_spark.operators.similarity import batch_topk
 

@@ -33,7 +33,7 @@ def no_pin(monkeypatch):
     registry-WIDE guard that walks the plan must run pin-free or it is
     blind to everything upstream of the ~25 pins (etl_sample_spark/
     pinning.py). Pinned-SHAPE tests (e.g. the simhash scan-once pin)
-    keep the default mode — they assert what the pin buys."""
+    build with the pins on — they assert what the pin buys."""
     monkeypatch.setenv("SPARK_GRAFT_NO_PIN", "1")
 
 

@@ -22,12 +22,10 @@ def test_write_parquet_tables_fans_out_all_tables(spark, tmp_path):
     write_docs(src, BANK_DOCS)
     raw = read_form(spark, src, schemas.BANK_SCRAPE_SCHEMA)
     tables = normalize(raw, bank_form_specs())
-    paths = write_parquet_tables(tables, out, mode="overwrite", cache_source=raw)
+    paths = write_parquet_tables(tables, out, mode="overwrite")
     assert set(paths) == set(tables)
     for name in tables:
         assert spark.read.parquet(os.path.join(out, name)).count() == tables[name].count()
-    # the shared scan was released after the fan-out
-    assert not raw.is_cached
 
 
 def test_idempotent_append_no_duplicates_on_retry(spark, tmp_path):
@@ -161,6 +159,35 @@ def test_compact_parquet_table_collapses_append_litter(spark, tmp_path):
     # and the rollover cap still applies when the table exceeds it
     compact_parquet_table(spark, out, target_rows_per_file=50)
     assert n_files(out) == 4
+
+
+def test_erase_rows_by_key_fails_loudly_when_the_old_copy_survives(spark, tmp_path, monkeypatch):
+    """If the pre-erasure copy survives its removal, the erased rows are
+    still on disk under ``<path>__old_*``: the erasure must raise naming
+    that directory (the new table is already live), never return as if
+    the bytes were gone."""
+    import glob
+    import shutil
+
+    import pytest as _pytest
+
+    from etl_sample_spark.sources.sinks import erase_rows_by_key
+
+    path = str(tmp_path / "tbl")
+    spark.range(10).write.parquet(path)
+    real_rmtree = shutil.rmtree
+
+    def keep_old_copy(p, *args, **kwargs):
+        if "__old_" not in os.fspath(p):
+            real_rmtree(p, *args, **kwargs)
+
+    monkeypatch.setattr(shutil, "rmtree", keep_old_copy)
+    victims = spark.createDataFrame([(3,), (4,)], "id BIGINT")
+    with _pytest.raises(RuntimeError, match="new table is live") as e:
+        erase_rows_by_key(spark, path, "id", victims)
+    stranded = glob.glob(path + "__old_*")
+    assert len(stranded) == 1 and stranded[0] in str(e.value)
+    assert {r["id"] for r in spark.read.parquet(path).collect()} == set(range(10)) - {3, 4}
 
 
 def test_write_partitioned_rejects_all_partition_cols(spark, tmp_path):
