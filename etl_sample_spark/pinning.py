@@ -53,6 +53,21 @@ def pin(df: DataFrame) -> DataFrame:
     pin materializes its input, so pinning anything corpus-sized trades
     a re-scan for a corpus-sized write to executor storage.
 
+    Pin only when Spark's own reuse cannot see the sharing (SCALE.md's
+    r16 sweep):
+
+    - the branches prune different columns or push different filters,
+      so their subtrees are no longer canonically equal (rfm's grid and
+      rank branches);
+    - the shared work is map-side, with no exchange for ReuseExchange to
+      reuse (simhash signatures);
+    - re-running it multiplies an expensive stage that cannot be reused
+      (scd2's per-branch customer scans).
+
+    Do NOT pin canonical-equal consumers of one exchange: ReuseExchange
+    already shares that exchange for free, keeps AQE, and keeps the
+    plan transparent.
+
     Know the second cost (measured r16, SCALE.md): a checkpointed
     relation is a stats-OPAQUE LogicalRDD — Catalyst sees
     ``defaultSizeInBytes`` for it, so downstream joins against the pin

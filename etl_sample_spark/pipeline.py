@@ -36,7 +36,12 @@ from etl_sample_spark.forms import (
     credit_form_specs,
 )
 from etl_sample_spark.normalize import normalize
-from etl_sample_spark.sources.documents import ROUTE_PATTERNS, quarantine_corrupt, read_form
+from etl_sample_spark.sources.documents import (
+    ROUTE_PATTERNS,
+    coalesce_by_bytes,
+    quarantine_corrupt,
+    read_form,
+)
 
 FORMS = {
     "bank_scrape": (schemas.BANK_SCRAPE_SCHEMA, bank_form_specs),
@@ -111,6 +116,12 @@ def run_batch_pipeline(
     dead-letter write. A later write of the same observed frame (the
     JDBC leg after parquet) recomputes it from the raw-parse cache and
     leaves the first count in place.
+
+    Tasks and files follow the input's bytes: each form's scan is
+    coalesced to one partition per ``spark.sql.files.maxPartitionBytes``
+    (``coalesce_by_bytes``) before it is cached, and every table inherits
+    that count. A form of a few KB writes each table in one task, to one
+    parquet file (one JDBC connection); a large form keeps its splits.
     """
     from etl_sample_spark.sources.sinks import write_jdbc_tables
 
@@ -123,7 +134,7 @@ def run_batch_pipeline(
         if not files:
             continue
         schema, specs_fn = FORMS[form]
-        raw = read_form(spark, files, schema, corrupt_col="_corrupt_record")
+        raw = coalesce_by_bytes(read_form(spark, files, schema, corrupt_col="_corrupt_record"))
         clean, corrupt = quarantine_corrupt(raw)
         try:
             if dead_letter_dir is not None:
@@ -141,11 +152,11 @@ def run_batch_pipeline(
             for name, obs in observations.items():
                 counts[name] = counts.get(name, 0) + obs.get["rows"]
         finally:
-            # quarantine_corrupt cached the raw parse: it shares the one
-            # JSON scan across this form's writes, and Spark needs it to
-            # query the corrupt column. Release it once they are done,
-            # or the per-form corpora pin executor memory for the
-            # session lifetime.
+            # quarantine_corrupt cached the sized raw parse: it shares
+            # the one JSON scan across this form's writes, and Spark
+            # needs it to query the corrupt column. Release it once they
+            # are done, or the per-form corpora pin executor memory for
+            # the session lifetime.
             raw.unpersist()
     if dead_letter_dir is not None:
         counts["__quarantined"] = n_quarantined

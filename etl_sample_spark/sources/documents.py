@@ -207,6 +207,40 @@ def read_form(
     return df
 
 
+def coalesce_by_bytes(df: DataFrame) -> DataFrame:
+    """``df`` coalesced to one partition per
+    ``spark.sql.files.maxPartitionBytes`` of input:
+    ``max(1, ceil(input_bytes / maxPartitionBytes))`` partitions.
+
+    Spark's file-split rule charges every file a 4 MB open cost and
+    floors the partition count at the default parallelism, so even a
+    few-KB document scan gets one partition per core or per file. Every
+    table normalized out of the scan inherits that count through
+    ``explode``, and each partition is one write task and one output
+    file (one JDBC connection on a database sink) per table. Sized
+    here, before the caller caches the scan, a small corpus writes one
+    file per table while a large one keeps one partition per split's
+    worth of bytes: coalesce never adds partitions.
+
+    ``input_bytes`` sums the ``sizeInBytes`` of the plan's leaves. For a
+    file scan that is the byte total of the listing the scan already
+    did, so sizing costs no listing and no job; a ``foreachBatch``
+    micro-batch's leaf carries its incremental plan's estimate. A leaf
+    whose size Spark does not know (an RDD-backed frame reports
+    ``spark.sql.defaultSizeInBytes``) leaves ``df`` unchanged, as does a
+    session without a JVM plan handle (Spark Connect).
+    """
+    jdf = getattr(df, "_jdf", None)
+    if jdf is None:
+        return df
+    conf = jdf.sparkSession().sessionState().conf()
+    leaves = jdf.queryExecution().analyzed().collectLeaves()
+    input_bytes = sum(leaves.apply(i).stats().sizeInBytes() for i in range(leaves.size()))
+    if input_bytes >= conf.defaultSizeInBytes():
+        return df
+    return df.coalesce(max(1, -(-input_bytes // conf.filesMaxPartitionBytes())))
+
+
 def quarantine_corrupt(df: DataFrame, corrupt_col: str = "_corrupt_record") -> tuple[DataFrame, DataFrame]:
     """(clean, quarantined): clean rows lose the corrupt column; the
     quarantine keeps raw text + source file for replay after a fix.
@@ -214,7 +248,11 @@ def quarantine_corrupt(df: DataFrame, corrupt_col: str = "_corrupt_record") -> t
     The parse result is cached first: Spark disallows queries that
     reference only the internal corrupt-record column of a raw JSON scan
     (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN), and both
-    halves re-scan the corpus otherwise anyway.
+    halves re-scan the corpus otherwise anyway. Size the scan with
+    ``coalesce_by_bytes`` before passing it in (``run_batch_pipeline``
+    does), so the cache and every write out of it run one task per
+    ``maxPartitionBytes`` of input; ``source_file`` is stamped below
+    the coalesce, inside the scan, so it stays exact.
 
     Cache lifecycle contract: the cache is keyed on the INPUT plan, so
     the caller unpersists by calling ``df.unpersist()`` on the frame it

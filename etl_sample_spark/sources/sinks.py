@@ -6,11 +6,16 @@ appends, ``Sample-Json-to-SQL-Full-Pipeline-EO-10-03-2019.py:28,807-816``).
 
 Multi-output single-pass (SURVEY §4): the reference fans one document out
 to 22 sink calls; in Spark each table write is an action, so the callers
-cache the shared document scan once — without it the JSON corpus would
-be re-read per table. The writers here take the tables only: caching is
+size the shared document scan by its bytes and cache it once. Without
+the cache the JSON corpus would be re-read per table; without the sizing
+(``sources.documents.coalesce_by_bytes``) every table write would run
+one task, and leave one file, per partition of Spark's file split —
+one per core, or per file when there are fewer, even for a few-KB
+corpus. The writers here take the tables only: sizing and caching are
 the caller's, because the caller knows the scan's lifetime.
-``pipeline.run_batch_pipeline`` caches each form's raw parse, and
-``streaming.ingest.foreach_batch_normalize`` each micro-batch.
+``pipeline.run_batch_pipeline`` sizes and caches each form's raw parse,
+and ``streaming.ingest.foreach_batch_normalize`` (and its JDBC twin)
+each micro-batch.
 
 Directory rewrites (erasure, compaction, rollup maintenance, the SCD2
 stream sink) install their new copy through ``swap_parquet_dir``, the
@@ -324,10 +329,11 @@ def compact_parquet_table(
     compression: str | None = None,
 ) -> int:
     """Small-file compaction for an append-accumulated parquet table —
-    the maintenance job every streaming sink needs: micro-batch appends
-    (``foreach_batch_normalize``) land one file set per trigger, and a
-    year of 1-minute triggers is ~500k files per table even when each
-    batch is disciplined.
+    the maintenance job every streaming sink needs. A small trigger of
+    ``foreach_batch_normalize`` already writes one file per table (its
+    batch is sized by bytes), but each trigger adds its own
+    ``__batch_id`` partition, so files still accumulate one set per
+    trigger: a year of 1-minute triggers is ~500k files per table.
 
     Rewrites the table into ``ceil(rows / target_rows_per_file)`` files
     (per partition directory when ``partition_cols`` is given, reusing

@@ -21,7 +21,7 @@ from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import StructType
 
 from etl_sample_spark.normalize import TableSpec, normalize
-from etl_sample_spark.sources.documents import sf_id_column
+from etl_sample_spark.sources.documents import coalesce_by_bytes, sf_id_column
 
 
 def stream_documents(
@@ -61,6 +61,20 @@ def stream_documents(
     return reader.json(path).withColumn("sf_id", sf_id_column())
 
 
+def _write_batch_partition(df: DataFrame, path: str, batch_id: int) -> None:
+    """Write ``df`` as the ``__batch_id=<batch_id>`` partition under
+    ``path``, replacing that partition only (dynamic partition
+    overwrite): a replayed micro-batch rewrites its own partition
+    instead of appending next to its first attempt."""
+    (
+        df.withColumn("__batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("__batch_id")
+        .parquet(path)
+    )
+
+
 def foreach_batch_normalize(
     specs: list[TableSpec],
     out_dir: str,
@@ -70,8 +84,11 @@ def foreach_batch_normalize(
     """T6 multi-table fan-out: one micro-batch → every normalized table,
     appended as parquet under ``out_dir/<table>``.
 
-    The batch is cached so the 15+ table writes share one materialization
-    of the micro-batch (the single-pass design decision, SURVEY §4).
+    The batch is sized by its bytes (``coalesce_by_bytes``: one partition
+    per ``spark.sql.files.maxPartitionBytes``) and then cached, so the
+    15+ table writes share one materialization of the micro-batch (the
+    single-pass design decision, SURVEY §4) and a small trigger writes
+    one file per table.
 
     ``dead_letter_dir``: when the stream was built with a
     ``corrupt_col``, malformed documents are split out of the batch and
@@ -88,19 +105,12 @@ def foreach_batch_normalize(
     ``__batch_id=N`` partition: a replayed batch rewrites its partition
     in place instead of appending next to its first attempt. This is
     O(batch) per batch — no read of the existing table, unlike an
-    anti-join dedup — and the per-batch directories are the standard
-    small-file tradeoff ``compact_parquet_table`` exists for."""
+    anti-join dedup. Each trigger still adds one file set per table, so
+    across many triggers the tables accumulate the small files
+    ``compact_parquet_table`` exists for."""
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        def _write_batch_partition(df: DataFrame, path: str) -> None:
-            (
-                df.withColumn("__batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("__batch_id")
-                .parquet(path)
-            )
-
+        batch_df = coalesce_by_bytes(batch_df)
         batch_df.cache()
         try:
             clean = batch_df
@@ -109,10 +119,10 @@ def foreach_batch_normalize(
                     F.col(corrupt_col).alias("raw"),
                     F.col("sf_id"),
                 )
-                _write_batch_partition(corrupt, dead_letter_dir)
+                _write_batch_partition(corrupt, dead_letter_dir, batch_id)
                 clean = batch_df.where(F.col(corrupt_col).isNull()).drop(corrupt_col)
             for name, table in normalize(clean, specs).items():
-                _write_batch_partition(table, os.path.join(out_dir, name))
+                _write_batch_partition(table, os.path.join(out_dir, name), batch_id)
         finally:
             batch_df.unpersist()
 
@@ -199,10 +209,14 @@ def foreach_batch_normalize_jdbc(
     as all-null rows WITH the raw corrupt text as a column): corrupt
     rows land raw in an idempotent per-batch parquet partition, and
     only clean rows are normalized; the corrupt column never reaches
-    the database."""
+    the database.
+
+    The batch is sized and cached as in ``foreach_batch_normalize``, so
+    a small trigger scans it, and writes its dead letters, in one task."""
     from etl_sample_spark.sources.sinks import jdbc_idempotent_append
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df = coalesce_by_bytes(batch_df)
         batch_df.cache()
         try:
             clean = batch_df
@@ -211,13 +225,7 @@ def foreach_batch_normalize_jdbc(
                     F.col(corrupt_col).alias("raw"),
                     F.col("sf_id"),
                 )
-                (
-                    corrupt.withColumn("__batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("__batch_id")
-                    .parquet(dead_letter_dir)
-                )
+                _write_batch_partition(corrupt, dead_letter_dir, batch_id)
                 clean = batch_df.where(F.col(corrupt_col).isNull()).drop(corrupt_col)
             for name, table in normalize(clean, specs).items():
                 table = with_row_identity(table, keys)

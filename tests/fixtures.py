@@ -150,3 +150,14 @@ def write_docs(base_dir: str, docs: dict[str, dict]) -> str:
         with open(os.path.join(base_dir, fname), "w") as f:
             json.dump(doc, f)
     return base_dir
+
+
+def write_bank_copies(base_dir: str, n: int) -> int:
+    """Write ``n`` bank-scrape documents, one file each, that differ only
+    in their owner name; returns the files' total bytes."""
+    docs = {
+        f"ACCT1{i:02d}_bank_scrape.json": dict(BANK_DOCS["ACCT001_bank_scrape.json"], name=f"owner {i}")
+        for i in range(n)
+    }
+    write_docs(base_dir, docs)
+    return sum(os.path.getsize(os.path.join(base_dir, name)) for name in docs)

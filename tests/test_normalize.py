@@ -360,6 +360,94 @@ def test_run_batch_pipeline_without_a_sink_raises(spark, tmp_path):
         run_batch_pipeline(spark, src, dead_letter_dir=str(tmp_path / "dead"))
 
 
+def _pipeline_writes(spark, monkeypatch, src, out, dead_letter_dir=None):
+    """Run ``run_batch_pipeline`` and return ``(path, tasks)`` for each
+    parquet write it made. Every write runs under a job group of its
+    own, so its jobs are told apart from the call's other jobs."""
+    import uuid
+
+    from pyspark.sql import DataFrameWriter
+
+    from etl_sample_spark.pipeline import run_batch_pipeline
+
+    sc = spark.sparkContext
+    call = uuid.uuid4().hex[:8]
+    groups: list[tuple[str, str]] = []
+    parquet = DataFrameWriter.parquet
+
+    def grouped_parquet(self, path, *args, **kwargs):
+        group = f"test-pipeline-write-{call}-{len(groups)}"
+        groups.append((path, group))
+        sc.setJobGroup(group, f"write {path}")
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", grouped_parquet)
+    try:
+        run_batch_pipeline(spark, src, parquet_out=out, dead_letter_dir=dead_letter_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    writes = []
+    for path, group in groups:
+        jobs = tracker.getJobIdsForGroup(group)
+        assert len(jobs) == 1, (path, jobs)
+        stages = tracker.getJobInfo(jobs[0]).stageIds
+        writes.append((path, sum(tracker.getStageInfo(s).numTasks for s in stages)))
+    return writes
+
+
+def test_run_batch_pipeline_writes_one_task_and_file_per_small_table(spark, tmp_path, monkeypatch):
+    """Each form's scan is coalesced to one partition per
+    ``maxPartitionBytes`` of input before it is cached, so over a
+    multi-file corpus of a few KB every table and dead-letter write runs
+    ONE task and leaves one file, where Spark's file split alone gives
+    the scan a partition per file."""
+    import collections
+    import glob
+    import os
+
+    from tests.fixtures import ACTION_DOCS, BANK_DOCS, COMBINED_DOCS, CREDIT_DOCS, write_docs
+
+    src = str(tmp_path / "in")
+    for docs in (BANK_DOCS, CREDIT_DOCS, COMBINED_DOCS, ACTION_DOCS):
+        write_docs(src, docs)
+    with open(os.path.join(src, "BAD001_bank_scrape.json"), "w") as f:
+        f.write("{broken json")
+    out, dlq = str(tmp_path / "star"), str(tmp_path / "dead")
+
+    writes = _pipeline_writes(spark, monkeypatch, src, out, dead_letter_dir=dlq)
+    assert len(writes) > 20
+    assert {tasks for _path, tasks in writes} == {1}
+    # A table shared by two forms is appended twice: one file per write.
+    n_writes = collections.Counter(path for path, _tasks in writes)
+    for path, n in n_writes.items():
+        assert len(glob.glob(os.path.join(path, "*.parquet"))) <= n, path
+
+
+def test_run_batch_pipeline_write_tasks_scale_with_input_bytes(spark, tmp_path, monkeypatch):
+    """The sizing is proportional, not a fixed coalesce(1): with
+    ``spark.sql.files.maxPartitionBytes`` below the form's bytes, its
+    writes run at least 2 tasks and at most ``ceil(bytes / target)``."""
+    import math
+
+    from tests.fixtures import write_bank_copies
+
+    src = str(tmp_path / "in")
+    n_bytes = write_bank_copies(src, 8)
+    target = n_bytes // 3
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(target))
+    try:
+        writes = _pipeline_writes(spark, monkeypatch, src, str(tmp_path / "star"))
+    finally:
+        spark.conf.set(key, prev)
+    assert writes
+    for path, tasks in writes:
+        assert 2 <= tasks <= math.ceil(n_bytes / target), (path, tasks)
+
+
 def test_empty_tu_ffr_array_skips_instead_of_crashing(spark, tmp_path_factory):
     """r11 review regression: a document with "TU_FFR_Report": [] (valid
     JSON, passes the IS-NOT-NULL required guard) used to crash the WHOLE

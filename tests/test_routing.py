@@ -112,6 +112,62 @@ def test_corrupt_documents_quarantined_not_dropped(spark, tmp_path_factory):
     assert bad[0]["raw"].startswith('{"name": "truncated"')
 
 
+def test_coalesce_by_bytes_keeps_quarantine_file_names_exact(spark, tmp_path_factory):
+    """Sizing the scan must not move ``input_file_name()`` off it: after
+    the coalesce the quarantine's ``source_file`` and the clean rows'
+    ``sf_id`` are those of the unsized scan, for names with a space and
+    a literal '+' (the URI-decoding cases)."""
+    import json
+    import os
+
+    from etl_sample_spark.sources.documents import coalesce_by_bytes, quarantine_corrupt
+
+    base = str(tmp_path_factory.mktemp("sized names"))
+    doc = json.dumps(BANK_DOCS["ACCT001_bank_scrape.json"])
+    for name in ("with space_bank_scrape.json", "a+b_bank_scrape.json", "c+d e_bank_scrape.json"):
+        with open(os.path.join(base, name), "w") as f:
+            f.write(doc)
+    for name in ("bad one_bank_scrape.json", "bad+two_bank_scrape.json"):
+        with open(os.path.join(base, name), "w") as f:
+            f.write('{"name": "truncated", "accounts": [')
+
+    def split(sized: bool):
+        df = read_form(spark, f"{base}/*.json", schemas.BANK_SCRAPE_SCHEMA, corrupt_col="_corrupt_record")
+        assert df.rdd.getNumPartitions() > 1
+        if sized:
+            df = coalesce_by_bytes(df)
+            assert df.rdd.getNumPartitions() == 1
+        clean, quarantined = quarantine_corrupt(df)
+        try:
+            return (
+                sorted(r["sf_id"] for r in clean.collect()),
+                sorted(r["source_file"] for r in quarantined.collect()),
+            )
+        finally:
+            df.unpersist()
+
+    ids, sources = split(sized=True)
+    assert ids == ["a+b", "c+d e", "with space"]
+    assert len(sources) == 2 and all(s.endswith("_bank_scrape.json") for s in sources)
+    assert (ids, sources) == split(sized=False)
+
+
+def test_coalesce_by_bytes_keeps_partitions_of_unknown_size(spark, mixed_dir):
+    """Coalesce never adds partitions, and a frame whose size Spark does
+    not know (an RDD-backed frame reports the default size) keeps its
+    partition count; a small file scan collapses to one partition; a
+    frame with no JVM plan handle (Spark Connect) passes through."""
+    from etl_sample_spark.sources.documents import coalesce_by_bytes
+
+    rdd_df = spark.createDataFrame(spark.sparkContext.parallelize([(i,) for i in range(8)], 4), "a int")
+    assert coalesce_by_bytes(rdd_df).rdd.getNumPartitions() == 4
+    scan = read_form(spark, f"{mixed_dir}/*.json", schemas.COMBINED_SCHEMA)
+    assert scan.rdd.getNumPartitions() > 1
+    assert coalesce_by_bytes(scan).rdd.getNumPartitions() == 1
+    no_jvm = object()
+    assert coalesce_by_bytes(no_jvm) is no_jvm
+
+
 # ---- S2: scheme-qualified object-store URIs (SURVEY §2.1) ----------------
 # The reference lists Azure blobs explicitly (pipeline.py:769-793); Spark
 # reads object stores directly, but the ingest loop's emptiness probe must

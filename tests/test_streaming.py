@@ -53,6 +53,36 @@ def test_ingest_fan_out_exactly_once(spark, tmp_path):
     assert spark.read.parquet(os.path.join(out, "bank_account")).count() == 3
 
 
+def test_ingest_batch_writes_at_most_ceil_bytes_files_per_table(spark, tmp_path):
+    """A micro-batch is coalesced to one partition per
+    ``maxPartitionBytes`` of input before its fan-out, so one
+    ``foreach_batch_normalize`` call over a multi-file batch leaves at
+    most ``ceil(bytes / target)`` files in each table's ``__batch_id``
+    partition, where the file split alone gives one per scan partition."""
+    import glob
+    import math
+
+    from tests.fixtures import write_bank_copies
+
+    src, out, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ckpt")
+    n_bytes = write_bank_copies(src, 8)
+    target = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.files.maxPartitionBytes")
+    )
+    limit = math.ceil(n_bytes / target)
+
+    stream = stream_documents(spark, src, schemas.BANK_SCRAPE_SCHEMA)
+    _await(run_ingest_available_now(stream, bank_form_specs(), out, ckpt))
+    tables = sorted(os.listdir(out))
+    assert "bank_scrape_info" in tables and "transactions" in tables
+    for table in tables:
+        batches = glob.glob(os.path.join(out, table, "__batch_id=*"))
+        assert [os.path.basename(b) for b in batches] in ([], ["__batch_id=0"]), table
+        files = glob.glob(os.path.join(out, table, "__batch_id=0", "*.parquet"))
+        assert len(files) <= limit, (table, len(files))
+    assert spark.read.parquet(os.path.join(out, "bank_scrape_info")).count() == 8
+
+
 def _write_events_json(path: str, rows: list[dict], fname: str) -> None:
     os.makedirs(path, exist_ok=True)
     with open(os.path.join(path, fname), "w") as f:
