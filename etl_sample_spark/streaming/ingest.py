@@ -65,9 +65,17 @@ def _write_batch_partition(df: DataFrame, path: str, batch_id: int) -> None:
     """Write ``df`` as the ``__batch_id=<batch_id>`` partition under
     ``path``, replacing that partition only (dynamic partition
     overwrite): a replayed micro-batch rewrites its own partition
-    instead of appending next to its first attempt."""
+    instead of appending next to its first attempt.
+
+    The id is stamped as a STRING literal: Spark inlines an int literal
+    into the generated Java source, so every batch would compile its
+    classes afresh, while a string literal is passed to the generated
+    code by reference and batch N+1 reuses batch N's classes. Partition
+    values live in the directory name, not the data files, so the
+    layout (``__batch_id=N``) and the integer type Spark infers on read
+    are unchanged."""
     (
-        df.withColumn("__batch_id", F.lit(batch_id))
+        df.withColumn("__batch_id", F.lit(str(batch_id)))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("__batch_id")

@@ -161,3 +161,11 @@ def write_bank_copies(base_dir: str, n: int) -> int:
     }
     write_docs(base_dir, docs)
     return sum(os.path.getsize(os.path.join(base_dir, name)) for name in docs)
+
+
+def codegen_compilations(spark) -> int:
+    """Janino compilations this JVM has run so far (Spark's
+    ``CodegenMetrics``); a generated class served from the codegen
+    cache does not count."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()

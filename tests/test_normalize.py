@@ -448,6 +448,25 @@ def test_run_batch_pipeline_write_tasks_scale_with_input_bytes(spark, tmp_path, 
         assert 2 <= tasks <= math.ceil(n_bytes / target), (path, tasks)
 
 
+def test_run_batch_pipeline_warm_call_compiles_nothing(spark, tmp_path):
+    """A call over the four-form corpus generates ~117 distinct classes,
+    more than Spark's default 100-entry codegen cache holds, so with the
+    default a second call recompiles ~106 of them. ``get_spark`` sizes
+    the cache to the working set: the second call compiles none."""
+    from etl_sample_spark.pipeline import run_batch_pipeline
+    from tests.fixtures import codegen_compilations
+
+    src = str(tmp_path / "in")
+    for docs in (BANK_DOCS, CREDIT_DOCS, COMBINED_DOCS, ACTION_DOCS):
+        write_docs(src, docs)
+    for call in range(2):
+        before = codegen_compilations(spark)
+        run_batch_pipeline(
+            spark, src, parquet_out=str(tmp_path / f"star{call}"), dead_letter_dir=str(tmp_path / f"dead{call}")
+        )
+    assert codegen_compilations(spark) - before == 0
+
+
 def test_empty_tu_ffr_array_skips_instead_of_crashing(spark, tmp_path_factory):
     """r11 review regression: a document with "TU_FFR_Report": [] (valid
     JSON, passes the IS-NOT-NULL required guard) used to crash the WHOLE

@@ -1490,6 +1490,51 @@ def test_foreach_batch_normalize_replay_idempotent(spark, tmp_path):
     )
 
 
+def test_foreach_batch_normalize_next_batch_compiles_nothing(spark, tmp_path):
+    """The batch id is stamped as a string literal, which Spark passes
+    to generated code by reference: batch 1 reuses batch 0's classes
+    (an int literal is inlined into the Java source, so every combined-form
+    batch recompiled ~40 classes). The layout is unchanged: one
+    ``__batch_id=N`` directory per batch, read back as an integer
+    column with the same rows in each batch."""
+    from pyspark.sql.types import IntegerType
+
+    from etl_sample_spark.forms import combined_form_specs
+    from etl_sample_spark.sources.documents import sf_id_column
+    from etl_sample_spark.streaming.ingest import foreach_batch_normalize
+    from tests.fixtures import COMBINED_DOCS, codegen_compilations
+
+    src = str(tmp_path / "in")
+    out = str(tmp_path / "out")
+    write_docs(src, COMBINED_DOCS)
+    batch = (
+        spark.read.option("multiLine", "true")
+        .schema(schemas.COMBINED_SCHEMA)
+        .json(src)
+        .withColumn("sf_id", sf_id_column())
+    )
+    fn = foreach_batch_normalize(combined_form_specs(), out)
+    fn(batch, 0)
+    before = codegen_compilations(spark)
+    fn(batch, 1)
+    assert codegen_compilations(spark) - before == 0
+    tables = sorted(os.listdir(out))
+    assert len(tables) > 10
+    for t in tables:
+        path = os.path.join(out, t)
+        assert sorted(d for d in os.listdir(path) if d.startswith("__batch_id")) == [
+            "__batch_id=0",
+            "__batch_id=1",
+        ], t
+        df = spark.read.parquet(path)
+        assert df.schema["__batch_id"].dataType == IntegerType(), t
+        rows = {0: [], 1: []}
+        for row in df.collect():
+            fields = row.asDict()
+            rows[fields.pop("__batch_id")].append(repr(sorted(fields.items())))
+        assert sorted(rows[0]) == sorted(rows[1]), t
+
+
 def test_jdbc_fanout_quarantines_corrupt_docs(spark, tmp_path):
     """r11 review regression: the JDBC fan-out previously had NO corrupt
     handling — malformed docs became all-null SQL rows with the raw
