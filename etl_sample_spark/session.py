@@ -23,7 +23,7 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 # over all four forms, 141 per cold pass of the benchmark's query mix,
 # 77 for a stream's first micro-batch. The default LRU is smaller than
 # each, so sequential reuse evicts every class before it comes round
-# again and a warm call recompiles ~106 of them (~25 ms each). 1000
+# again and a warm call recompiled 86–106 of them (~22 ms each). 1000
 # holds a session that serves all three, with headroom.
 CODEGEN_CACHE_MAX_ENTRIES = 1000
 
