@@ -23,9 +23,10 @@ Semantics preserved from the reference:
 
 Scale: a spec compiles to projections + generators only — no shuffle,
 no Python. Normalizing 100 TB of documents is one map-only pass per
-output table (share the scan via ``cache()`` or ``foreachBatch``; see
+output table over one shared scan, which
+``sources.documents.quarantine_corrupt`` sizes and caches for
 ``pipeline.run_batch_pipeline`` and
-``streaming.ingest.foreach_batch_normalize``).
+``streaming.ingest.foreach_batch_normalize``.
 """
 
 from __future__ import annotations
@@ -182,6 +183,8 @@ def normalize(docs: DataFrame, specs: list[TableSpec]) -> dict[str, DataFrame]:
 
     Returns lazy DataFrames — one Catalyst plan per output table, each
     reading only its own nested paths (column pruning reaches the JSON/
-    parquet scan). Pair with ``docs.cache()`` when materializing many
-    tables from one pass (SURVEY §4 'multi-output single-pass')."""
+    parquet scan). To materialize many tables from one pass (SURVEY §4
+    'multi-output single-pass'), normalize the ``clean`` frame of
+    ``sources.documents.quarantine_corrupt``, which caches the scan
+    for the length of its block."""
     return {spec.name: compile_table(docs, spec) for spec in specs}

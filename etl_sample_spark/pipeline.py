@@ -38,7 +38,6 @@ from etl_sample_spark.forms import (
 from etl_sample_spark.normalize import normalize
 from etl_sample_spark.sources.documents import (
     ROUTE_PATTERNS,
-    coalesce_by_bytes,
     quarantine_corrupt,
     read_form,
 )
@@ -117,13 +116,14 @@ def run_batch_pipeline(
     JDBC leg after parquet) recomputes it from the raw-parse cache and
     leaves the first count in place.
 
-    Tasks and files follow the input's bytes: each form's scan is
-    coalesced to one partition per ``spark.sql.files.maxPartitionBytes``
-    (``coalesce_by_bytes``) before it is cached, and every table inherits
-    that count. A form of a few KB writes each table in one task, to one
-    parquet file (one JDBC connection); a large form keeps its splits.
+    Tasks and files follow the input's bytes: ``quarantine_corrupt``
+    sizes each form's scan to one partition per
+    ``spark.sql.files.maxPartitionBytes`` and caches it for the form's
+    writes, and every table inherits that count. A form of a few KB
+    writes each table in one task, to one parquet file (one JDBC
+    connection); a large form keeps its splits.
     """
-    from etl_sample_spark.sources.sinks import write_jdbc_tables
+    from etl_sample_spark.sources.sinks import write_jdbc_tables, write_parquet_tables
 
     if parquet_out is None and jdbc_url is None:
         raise ValueError("run_batch_pipeline needs a sink: pass parquet_out, jdbc_url or both")
@@ -134,30 +134,25 @@ def run_batch_pipeline(
         if not files:
             continue
         schema, specs_fn = FORMS[form]
-        raw = coalesce_by_bytes(read_form(spark, files, schema, corrupt_col="_corrupt_record"))
-        clean, corrupt = quarantine_corrupt(raw)
-        try:
+        raw = read_form(spark, files, schema, corrupt_col="_corrupt_record")
+        with quarantine_corrupt(raw, "_corrupt_record") as (clean, corrupt):
             if dead_letter_dir is not None:
-                corrupt, obs = _observe_rows(corrupt.withColumn("form", F.lit(form)))
+                corrupt, obs = _observe_rows(
+                    corrupt.select(
+                        "source_file", F.col("_corrupt_record").alias("raw"), F.lit(form).alias("form")
+                    )
+                )
                 corrupt.write.mode("append").parquet(dead_letter_dir)
                 n_quarantined += obs.get["rows"]
             tables, observations = {}, {}
             for name, table in normalize(clean, specs_fn()).items():
                 tables[name], observations[name] = _observe_rows(table)
             if parquet_out is not None:
-                for name, table in tables.items():
-                    table.write.mode("append").parquet(os.path.join(parquet_out, name))
+                write_parquet_tables(tables, parquet_out)
             if jdbc_url is not None:
                 write_jdbc_tables(tables, jdbc_url, db_schema, options=jdbc_options)
             for name, obs in observations.items():
                 counts[name] = counts.get(name, 0) + obs.get["rows"]
-        finally:
-            # quarantine_corrupt cached the sized raw parse: it shares
-            # the one JSON scan across this form's writes, and Spark
-            # needs it to query the corrupt column. Release it once they
-            # are done, or the per-form corpora pin executor memory for
-            # the session lifetime.
-            raw.unpersist()
     if dead_letter_dir is not None:
         counts["__quarantined"] = n_quarantined
     return counts

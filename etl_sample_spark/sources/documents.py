@@ -18,10 +18,12 @@ from __future__ import annotations
 
 import os
 import re
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructType
 
 # Route → filename regex, in the reference's dispatch order (:798-805).
 ROUTE_PATTERNS = (
@@ -123,17 +125,35 @@ def _matched_paths(spark: SparkSession, path: str | list[str]) -> list[str] | No
     return [path] if os.path.exists(path) else []
 
 
+def _json_reader(reader, schema: StructType, corrupt_col: str | None):
+    """``reader`` (``spark.read`` or ``spark.readStream``) set up for
+    schema'd multiLine JSON, one document per file (S1), in PERMISSIVE
+    mode. With ``corrupt_col`` the schema gains that string column and
+    a malformed document surfaces as a row holding its raw text there
+    (all other fields null) instead of an all-null row."""
+    reader = reader.option("multiLine", "true").option("mode", "PERMISSIVE")
+    if corrupt_col is not None:
+        reader = reader.option("columnNameOfCorruptRecord", corrupt_col)
+    return reader.schema(_scan_schema(schema, corrupt_col))
+
+
+def _scan_schema(schema: StructType, corrupt_col: str | None) -> StructType:
+    if corrupt_col is None:
+        return schema
+    return StructType(schema.fields[:]).add(corrupt_col, StringType())
+
+
 def read_form(
     spark: SparkSession,
     path: str,
     schema: StructType,
-    with_sf_id: bool = True,
     corrupt_col: str | None = None,
     allow_empty: bool = False,
 ) -> DataFrame:
     """Scan one document form: multiLine JSON (one document per file,
     S1) with an explicit schema — missing sections become nulls, which
-    downstream specs treat as 'skip this table for this doc'.
+    downstream specs treat as 'skip this table for this doc'. Every row
+    carries its ``sf_id``.
 
     ``corrupt_col``: when set, malformed documents surface as rows whose
     ``corrupt_col`` holds the raw text (all other fields null) instead
@@ -144,23 +164,16 @@ def read_form(
     Shape invariant: the returned schema is a function of the FLAGS
     only, never of whether the path had data — an empty arrival dir
     yields a typed-empty frame with the same columns (incl.
-    ``corrupt_col``/``source_file``/``sf_id`` when enabled) the
-    non-empty scan would produce, so downstream unions and
-    ``quarantine_corrupt`` never hit data-dependent UNRESOLVED_COLUMN.
+    ``corrupt_col``/``source_file`` when enabled) the non-empty scan
+    would produce, so downstream unions and ``quarantine_corrupt`` never
+    hit data-dependent UNRESOLVED_COLUMN.
     """
 
     def _typed_empty() -> DataFrame:
-        from pyspark.sql.types import StringType
-
-        s = StructType(schema.fields[:])
-        if corrupt_col is not None:
-            s = s.add(corrupt_col, StringType())
-        empty = spark.createDataFrame([], s)
+        empty = spark.createDataFrame([], _scan_schema(schema, corrupt_col))
         if corrupt_col is not None:
             empty = empty.withColumn("source_file", F.lit(None).cast("string"))
-        if with_sf_id:
-            empty = empty.withColumn("sf_id", F.lit(None).cast("string"))
-        return empty
+        return empty.withColumn("sf_id", F.lit(None).cast("string"))
 
     probe_unavailable = False
     if allow_empty:
@@ -173,15 +186,8 @@ def read_form(
         probe_unavailable = matched is None
         if matched == []:
             return _typed_empty()
-    reader = spark.read.option("multiLine", "true").option("mode", "PERMISSIVE")
-    scan_schema = schema
-    if corrupt_col is not None:
-        from pyspark.sql.types import StringType
-
-        scan_schema = StructType(schema.fields[:]).add(corrupt_col, StringType())
-        reader = reader.option("columnNameOfCorruptRecord", corrupt_col)
     try:
-        df = reader.schema(scan_schema).json(path)
+        df = _json_reader(spark.read, schema, corrupt_col).json(path)
         if probe_unavailable:
             # Classic Spark resolves the path inside .json() above, but
             # Spark Connect builds a lazy proto plan and raises nothing
@@ -202,9 +208,7 @@ def read_form(
         # the file scan runs — evaluated later over a cached relation
         # (as quarantine_corrupt does) it returns ''.
         df = df.withColumn("source_file", F.input_file_name())
-    if with_sf_id:
-        df = df.withColumn("sf_id", sf_id_column())
-    return df
+    return df.withColumn("sf_id", sf_id_column())
 
 
 def coalesce_by_bytes(df: DataFrame) -> DataFrame:
@@ -218,9 +222,9 @@ def coalesce_by_bytes(df: DataFrame) -> DataFrame:
     table normalized out of the scan inherits that count through
     ``explode``, and each partition is one write task and one output
     file (one JDBC connection on a database sink) per table. Sized
-    here, before the caller caches the scan, a small corpus writes one
-    file per table while a large one keeps one partition per split's
-    worth of bytes: coalesce never adds partitions.
+    here, before ``quarantine_corrupt`` caches the scan, a small corpus
+    writes one file per table while a large one keeps one partition per
+    split's worth of bytes: coalesce never adds partitions.
 
     ``input_bytes`` sums the ``sizeInBytes`` of the plan's leaves. For a
     file scan that is the byte total of the listing the scan already
@@ -241,27 +245,35 @@ def coalesce_by_bytes(df: DataFrame) -> DataFrame:
     return df.coalesce(max(1, -(-input_bytes // conf.filesMaxPartitionBytes())))
 
 
-def quarantine_corrupt(df: DataFrame, corrupt_col: str = "_corrupt_record") -> tuple[DataFrame, DataFrame]:
-    """(clean, quarantined): clean rows lose the corrupt column; the
-    quarantine keeps raw text + source file for replay after a fix.
+@contextmanager
+def quarantine_corrupt(
+    df: DataFrame, corrupt_col: str = "_corrupt_record"
+) -> Iterator[tuple[DataFrame, DataFrame | None]]:
+    """Size and cache a document frame for the length of a ``with``
+    block, which gets ``(clean, corrupt)``: the one document intake of
+    ``run_batch_pipeline`` and both ``foreachBatch`` fan-outs.
 
-    The parse result is cached first: Spark disallows queries that
-    reference only the internal corrupt-record column of a raw JSON scan
-    (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN), and both
-    halves re-scan the corpus otherwise anyway. Size the scan with
-    ``coalesce_by_bytes`` before passing it in (``run_batch_pipeline``
-    does), so the cache and every write out of it run one task per
-    ``maxPartitionBytes`` of input; ``source_file`` is stamped below
-    the coalesce, inside the scan, so it stays exact.
+    - ``clean``: the well-formed rows, without ``corrupt_col`` and
+      ``source_file``, ready for ``normalize()``.
+    - ``corrupt``: the malformed rows with all their columns, for the
+      caller to project into its dead-letter layout; ``None`` when
+      ``df`` has no ``corrupt_col`` (then ``clean`` is the whole frame).
 
-    Cache lifecycle contract: the cache is keyed on the INPUT plan, so
-    the caller unpersists by calling ``df.unpersist()`` on the frame it
-    passed in, once both halves are consumed (pipeline.py does exactly
-    this per form — without it the per-form corpora pin executor memory
-    for the session lifetime)."""
-    df = df.cache()
-    corrupt = df.where(F.col(corrupt_col).isNotNull()).select(
-        "source_file", F.col(corrupt_col).alias("raw")
-    )
-    clean = df.where(F.col(corrupt_col).isNull()).drop(corrupt_col, "source_file")
-    return clean, corrupt
+    The frame is coalesced by its bytes first (``coalesce_by_bytes``),
+    so the cache and every write out of it run one task per
+    ``maxPartitionBytes`` of input; ``source_file`` is stamped inside
+    the scan, below the coalesce, so it stays exact. The cache shares
+    one parse across all of the block's writes, and Spark needs it to
+    query the corrupt column at all
+    (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN). It is
+    released when the block exits, also when the block raises, so no
+    corpus stays pinned in executor memory for the session."""
+    df = coalesce_by_bytes(df).cache()
+    try:
+        if corrupt_col not in df.columns:
+            yield df, None
+        else:
+            clean = df.where(F.col(corrupt_col).isNull()).drop(corrupt_col, "source_file")
+            yield clean, df.where(F.col(corrupt_col).isNotNull())
+    finally:
+        df.unpersist()

@@ -5,17 +5,15 @@ the reference's duplicate-on-retry gap (at-least-once blob loop + blind
 appends, ``Sample-Json-to-SQL-Full-Pipeline-EO-10-03-2019.py:28,807-816``).
 
 Multi-output single-pass (SURVEY §4): the reference fans one document out
-to 22 sink calls; in Spark each table write is an action, so the callers
-size the shared document scan by its bytes and cache it once. Without
-the cache the JSON corpus would be re-read per table; without the sizing
-(``sources.documents.coalesce_by_bytes``) every table write would run
-one task, and leave one file, per partition of Spark's file split —
-one per core, or per file when there are fewer, even for a few-KB
-corpus. The writers here take the tables only: sizing and caching are
-the caller's, because the caller knows the scan's lifetime.
-``pipeline.run_batch_pipeline`` sizes and caches each form's raw parse,
-and ``streaming.ingest.foreach_batch_normalize`` (and its JDBC twin)
-each micro-batch.
+to 22 sink calls; in Spark each table write is an action, so the shared
+document scan is sized by its bytes and cached once, by
+``sources.documents.quarantine_corrupt`` — the one document intake of
+``pipeline.run_batch_pipeline`` and both ``streaming.ingest`` fan-outs.
+Without the cache the JSON corpus would be re-read per table; without
+the sizing every table write would run one task, and leave one file,
+per partition of Spark's file split — one per core, or per file when
+there are fewer, even for a few-KB corpus. The writers here take the
+tables only.
 
 Directory rewrites (erasure, compaction, rollup maintenance, the SCD2
 stream sink) install their new copy through ``swap_parquet_dir``, the
@@ -100,7 +98,7 @@ def idempotent_append(df: DataFrame, path: str, keys: list[str]) -> None:
     # pre-deduped, e.g. latest-wins, input when that choice matters).
     df = df.dropDuplicates(keys)
     try:
-        existing = spark.read.parquet(path).select(*keys).distinct()
+        existing = spark.read.parquet(path)
     except AnalysisException as ex:
         # ONLY "sink does not exist yet" may fall through to a plain
         # append. A transient read failure (permissions, corrupt footer,
@@ -111,16 +109,23 @@ def idempotent_append(df: DataFrame, path: str, keys: list[str]) -> None:
             raise
         df.write.mode("append").parquet(path)
         return
-    # eqNullSafe (r11 review): a plain `on=keys` anti-join never matches
-    # NULL keys (NULL = NULL is NULL), so a null-key row would be
-    # re-appended on EVERY retry — the exact bug this sink prevents.
-    ex_a = existing.select(*[F.col(k).alias(f"__ex_{k}") for k in keys])
+    _anti_join_keys(df, existing, keys).write.mode("append").parquet(path)
+
+
+def _anti_join_keys(df: DataFrame, existing: DataFrame, keys: list[str]) -> DataFrame:
+    """``df`` without the rows whose ``keys`` occur in ``existing``; only
+    the key columns of ``existing`` are read.
+
+    eqNullSafe (r11 review): a plain ``on=keys`` anti-join never matches
+    NULL keys (NULL = NULL is NULL), so a null-key row would be
+    re-appended on EVERY retry — the exact bug the idempotent sinks
+    prevent."""
+    ex_a = existing.select(*[F.col(k).alias(f"__ex_{k}") for k in keys]).distinct()
     cond = None
     for k in keys:
         c = F.col(k).eqNullSafe(F.col(f"__ex_{k}"))
         cond = c if cond is None else cond & c
-    fresh = df.join(ex_a, cond, "left_anti")
-    fresh.write.mode("append").parquet(path)
+    return df.join(ex_a, cond, "left_anti")
 
 
 # Missing-table SQLStates across the dialects the sink may meet:
@@ -192,13 +197,7 @@ def jdbc_idempotent_append(
     # idempotent_append (r11 review) — see the comments there.
     out = stringify_complex_columns(df).dropDuplicates(keys)
     try:
-        existing = _opt(spark.read.format("jdbc")).load().select(*keys).distinct()
-        ex_a = existing.select(*[F.col(k).alias(f"__ex_{k}") for k in keys])
-        cond = None
-        for k in keys:
-            c = F.col(k).eqNullSafe(F.col(f"__ex_{k}"))
-            cond = c if cond is None else cond & c
-        out = out.join(ex_a, cond, "left_anti")
+        out = _anti_join_keys(out, _opt(spark.read.format("jdbc")).load(), keys)
     except Exception as ex:  # noqa: BLE001 — classified below
         # ONLY "table does not exist yet" may fall through to a
         # create-on-first-append. Classified by SQLState (dialect-neutral)

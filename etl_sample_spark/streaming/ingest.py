@@ -7,7 +7,8 @@ between process and delete re-processes files into append sinks →
 duplicates. The Structured Streaming file source is strictly stronger:
 checkpointed exactly-once file tracking, ``cleanSource='archive'`` for
 the archival step (:807-809), and ``foreachBatch`` for the 22-table
-fan-out (:662-763) with one cached read per micro-batch.
+fan-out (:662-763) with one cached read per micro-batch — the same
+document intake (``quarantine_corrupt``) as ``run_batch_pipeline``.
 """
 
 from __future__ import annotations
@@ -17,11 +18,11 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from etl_sample_spark.normalize import TableSpec, normalize
-from etl_sample_spark.sources.documents import coalesce_by_bytes, sf_id_column
+from etl_sample_spark.sources.documents import _json_reader, quarantine_corrupt, sf_id_column
 
 
 def stream_documents(
@@ -39,19 +40,11 @@ def stream_documents(
     malformed documents as rows whose ``corrupt_col`` holds the raw text
     instead of ALL-NULL rows (PERMISSIVE's default), which would
     otherwise flow through ``normalize()`` as silently-empty records —
-    the streaming twin of the batch quarantine. Pair with
-    ``foreach_batch_normalize(..., dead_letter_dir=...)``."""
-    if corrupt_col is not None:
-        from pyspark.sql.types import StringType, StructType as _ST
-
-        schema = _ST(schema.fields[:]).add(corrupt_col, StringType())
-    reader = (
-        spark.readStream.option("multiLine", "true")
-        .option("mode", "PERMISSIVE")
-        .schema(schema)
-    )
-    if corrupt_col is not None:
-        reader = reader.option("columnNameOfCorruptRecord", corrupt_col)
+    the streaming twin of the batch quarantine. The fan-outs
+    (``foreach_batch_normalize`` and its JDBC twin) split those rows off
+    every batch: with a ``dead_letter_dir`` they are written there, and
+    without one they are dropped, as in ``run_batch_pipeline``."""
+    reader = _json_reader(spark.readStream, schema, corrupt_col)
     if archive_dir is not None:
         reader = reader.option("cleanSource", "archive").option(
             "sourceArchiveDir", archive_dir
@@ -83,6 +76,31 @@ def _write_batch_partition(df: DataFrame, path: str, batch_id: int) -> None:
     )
 
 
+def _fan_out(
+    specs: list[TableSpec],
+    write_table: Callable[[str, DataFrame, int], None],
+    dead_letter_dir: str | None,
+    corrupt_col: str,
+) -> Callable[[DataFrame, int], None]:
+    """The ``foreachBatch`` body both fan-outs share: one micro-batch →
+    every normalized table, each handed to ``write_table(name, table,
+    batch_id)``. ``quarantine_corrupt`` sizes and caches the batch while
+    its tables are written and splits off its malformed documents; they
+    go (raw text + ``sf_id``) to the batch's ``__batch_id=N`` partition
+    under ``dead_letter_dir`` when one is given, and are dropped
+    otherwise."""
+
+    def _write(batch_df: DataFrame, batch_id: int) -> None:
+        with quarantine_corrupt(batch_df, corrupt_col) as (clean, corrupt):
+            if dead_letter_dir is not None and corrupt is not None:
+                corrupt = corrupt.select(F.col(corrupt_col).alias("raw"), F.col("sf_id"))
+                _write_batch_partition(corrupt, dead_letter_dir, batch_id)
+            for name, table in normalize(clean, specs).items():
+                write_table(name, table, batch_id)
+
+    return _write
+
+
 def foreach_batch_normalize(
     specs: list[TableSpec],
     out_dir: str,
@@ -92,18 +110,12 @@ def foreach_batch_normalize(
     """T6 multi-table fan-out: one micro-batch → every normalized table,
     appended as parquet under ``out_dir/<table>``.
 
-    The batch is sized by its bytes (``coalesce_by_bytes``: one partition
-    per ``spark.sql.files.maxPartitionBytes``) and then cached, so the
-    15+ table writes share one materialization of the micro-batch (the
-    single-pass design decision, SURVEY §4) and a small trigger writes
-    one file per table.
-
-    ``dead_letter_dir``: when the stream was built with a
-    ``corrupt_col``, malformed documents are split out of the batch and
-    written (raw text + batch id) under this directory for replay after
-    a parser/schema fix, and only CLEAN rows are normalized — without
-    this, PERMISSIVE-mode failures land in every output table as
-    all-null records.
+    The batch goes through ``quarantine_corrupt`` (``_fan_out``): it is
+    sized by its bytes and cached while its tables are written, and
+    when the stream was built with a ``corrupt_col`` its malformed
+    documents never reach a table. With ``dead_letter_dir`` they are
+    written there (raw text + ``sf_id``, per batch); without one they
+    are dropped, as in ``run_batch_pipeline``.
 
     Exactly-once, not just checkpointed: foreachBatch is at-least-once
     (a batch that fails after SOME table writes re-runs whole), so a
@@ -117,24 +129,10 @@ def foreach_batch_normalize(
     across many triggers the tables accumulate the small files
     ``compact_parquet_table`` exists for."""
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = coalesce_by_bytes(batch_df)
-        batch_df.cache()
-        try:
-            clean = batch_df
-            if dead_letter_dir is not None and corrupt_col in batch_df.columns:
-                corrupt = batch_df.where(F.col(corrupt_col).isNotNull()).select(
-                    F.col(corrupt_col).alias("raw"),
-                    F.col("sf_id"),
-                )
-                _write_batch_partition(corrupt, dead_letter_dir, batch_id)
-                clean = batch_df.where(F.col(corrupt_col).isNull()).drop(corrupt_col)
-            for name, table in normalize(clean, specs).items():
-                _write_batch_partition(table, os.path.join(out_dir, name), batch_id)
-        finally:
-            batch_df.unpersist()
+    def _write_table(name: str, table: DataFrame, batch_id: int) -> None:
+        _write_batch_partition(table, os.path.join(out_dir, name), batch_id)
 
-    return _write
+    return _fan_out(specs, _write_table, dead_letter_dir, corrupt_col)
 
 
 def with_row_identity(table: DataFrame, keys: list[str], col: str = "SF_ROW_ID") -> DataFrame:
@@ -211,39 +209,32 @@ def foreach_batch_normalize_jdbc(
     committed — including after a partial per-partition JDBC commit —
     and the pipeline is exactly-once end-to-end.
 
-    ``dead_letter_dir``: the JDBC twin of the parquet fan-out's
-    quarantine (r11 review — previously this path had none, so a
-    corrupt-col stream would write malformed docs into every SQL table
-    as all-null rows WITH the raw corrupt text as a column): corrupt
-    rows land raw in an idempotent per-batch parquet partition, and
-    only clean rows are normalized; the corrupt column never reaches
-    the database.
-
-    The batch is sized and cached as in ``foreach_batch_normalize``, so
-    a small trigger scans it, and writes its dead letters, in one task."""
+    The batch body is ``foreach_batch_normalize``'s (``_fan_out``): the
+    batch is sized and cached while its tables are written, malformed
+    documents are split off and written to ``dead_letter_dir`` (an
+    idempotent per-batch parquet partition) or dropped without one, and
+    the corrupt column never reaches the database."""
     from etl_sample_spark.sources.sinks import jdbc_idempotent_append
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = coalesce_by_bytes(batch_df)
-        batch_df.cache()
-        try:
-            clean = batch_df
-            if dead_letter_dir is not None and corrupt_col in batch_df.columns:
-                corrupt = batch_df.where(F.col(corrupt_col).isNotNull()).select(
-                    F.col(corrupt_col).alias("raw"),
-                    F.col("sf_id"),
-                )
-                _write_batch_partition(corrupt, dead_letter_dir, batch_id)
-                clean = batch_df.where(F.col(corrupt_col).isNull()).drop(corrupt_col)
-            for name, table in normalize(clean, specs).items():
-                table = with_row_identity(table, keys)
-                jdbc_idempotent_append(
-                    table, url, f"{db_schema}.{name}", keys=["SF_ROW_ID"], options=options
-                )
-        finally:
-            batch_df.unpersist()
+    def _write_table(name: str, table: DataFrame, _batch_id: int) -> None:
+        jdbc_idempotent_append(
+            with_row_identity(table, keys), url, f"{db_schema}.{name}",
+            keys=["SF_ROW_ID"], options=options,
+        )
 
-    return _write
+    return _fan_out(specs, _write_table, dead_letter_dir, corrupt_col)
+
+
+def _drain(
+    docs_stream: DataFrame, sink: Callable[[DataFrame, int], None], checkpoint_dir: str
+) -> StreamingQuery:
+    """Start ``sink`` over everything currently in the source, then stop."""
+    return (
+        docs_stream.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def run_ingest_available_now(
@@ -256,15 +247,9 @@ def run_ingest_available_now(
     """Process everything currently in the source, then stop — the
     streaming equivalent of one reference driver-loop iteration, but
     exactly-once. Pass ``dead_letter_dir`` (with a corrupt-col stream)
-    to quarantine malformed documents instead of normalizing nulls."""
-    writer: DataStreamWriter = (
-        docs_stream.writeStream.foreachBatch(
-            foreach_batch_normalize(specs, out_dir, dead_letter_dir=dead_letter_dir)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
-    return writer.start()
+    to keep malformed documents for replay instead of dropping them."""
+    sink = foreach_batch_normalize(specs, out_dir, dead_letter_dir=dead_letter_dir)
+    return _drain(docs_stream, sink, checkpoint_dir)
 
 
 def run_ingest_available_now_jdbc(
@@ -281,19 +266,12 @@ def run_ingest_available_now_jdbc(
     file tracking (no re-reads across runs) + idempotent keyed appends
     (no duplicates within a redelivered batch) — the reference's
     stream→SQL-server production shape, made convergent. Pass
-    ``dead_letter_dir`` (with a corrupt-col stream) to quarantine
-    malformed documents instead of writing all-null rows to SQL."""
-    writer: DataStreamWriter = (
-        docs_stream.writeStream.foreachBatch(
-            foreach_batch_normalize_jdbc(
-                specs, url, db_schema, keys, options,
-                dead_letter_dir=dead_letter_dir,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
+    ``dead_letter_dir`` (with a corrupt-col stream) to keep malformed
+    documents for replay instead of dropping them."""
+    sink = foreach_batch_normalize_jdbc(
+        specs, url, db_schema, keys, options, dead_letter_dir=dead_letter_dir
     )
-    return writer.start()
+    return _drain(docs_stream, sink, checkpoint_dir)
 
 
 def run_cdc_to_scd2_stream(
@@ -433,10 +411,4 @@ def run_cdc_to_scd2_stream(
             raise
         swap_parquet_dir(tmp, dim_path)
 
-    (
-        changes.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(changes, _apply, checkpoint).awaitTermination()

@@ -74,9 +74,8 @@ def test_probe_adds_zero_shuffle_exchanges(spark, sf_dir):
     customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     # DELTA, not absolute: the session is shared across test modules and
-    # other tests legitimately cache (quarantine_corrupt, operator
-    # tests) — but sample BEFORE bloom_build so a cache regression in
-    # EITHER the build or the probe shows up in the delta.
+    # other tests may cache — but sample BEFORE bloom_build so a cache
+    # regression in EITHER the build or the probe shows up in the delta.
     cached_before = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
     bitmap = bloom_build(customer, "c_custkey", NUM_BITS, NUM_HASHES)
     pruned = bloom_probe(orders, "o_custkey", bitmap, NUM_BITS, NUM_HASHES)

@@ -104,12 +104,14 @@ def test_corrupt_documents_quarantined_not_dropped(spark, tmp_path_factory):
     df = read_form(
         spark, f"{base}/*_bank_scrape.json", schemas.BANK_SCRAPE_SCHEMA, corrupt_col="_corrupt_record"
     )
-    clean, quarantined = quarantine_corrupt(df)
-    assert clean.count() == len(BANK_DOCS)
-    bad = quarantined.collect()
+    with quarantine_corrupt(df) as (clean, quarantined):
+        assert clean.count() == len(BANK_DOCS)
+        assert "_corrupt_record" not in clean.columns
+        assert "source_file" not in clean.columns
+        bad = quarantined.collect()
     assert len(bad) == 1
     assert "BROKEN_bank_scrape.json" in bad[0]["source_file"]
-    assert bad[0]["raw"].startswith('{"name": "truncated"')
+    assert bad[0]["_corrupt_record"].startswith('{"name": "truncated"')
 
 
 def test_coalesce_by_bytes_keeps_quarantine_file_names_exact(spark, tmp_path_factory):
@@ -131,25 +133,64 @@ def test_coalesce_by_bytes_keeps_quarantine_file_names_exact(spark, tmp_path_fac
         with open(os.path.join(base, name), "w") as f:
             f.write('{"name": "truncated", "accounts": [')
 
-    def split(sized: bool):
+    def scan():
         df = read_form(spark, f"{base}/*.json", schemas.BANK_SCRAPE_SCHEMA, corrupt_col="_corrupt_record")
         assert df.rdd.getNumPartitions() > 1
-        if sized:
-            df = coalesce_by_bytes(df)
-            assert df.rdd.getNumPartitions() == 1
-        clean, quarantined = quarantine_corrupt(df)
-        try:
-            return (
-                sorted(r["sf_id"] for r in clean.collect()),
-                sorted(r["source_file"] for r in quarantined.collect()),
-            )
-        finally:
-            df.unpersist()
+        return df
 
-    ids, sources = split(sized=True)
+    def names(clean, quarantined):
+        return (
+            sorted(r["sf_id"] for r in clean.collect()),
+            sorted(r["source_file"] for r in quarantined.collect()),
+        )
+
+    sized = scan()
+    assert coalesce_by_bytes(sized).rdd.getNumPartitions() == 1
+    with quarantine_corrupt(sized) as (clean, quarantined):
+        ids, sources = names(clean, quarantined)
     assert ids == ["a+b", "c+d e", "with space"]
     assert len(sources) == 2 and all(s.endswith("_bank_scrape.json") for s in sources)
-    assert (ids, sources) == split(sized=False)
+    # The unsized twin: the same split by hand over the scan as read.
+    unsized = scan().cache()
+    try:
+        corrupt = F.col("_corrupt_record")
+        assert (ids, sources) == names(unsized.where(corrupt.isNull()), unsized.where(corrupt.isNotNull()))
+    finally:
+        unsized.unpersist()
+
+
+def test_quarantine_corrupt_releases_its_cache(spark, tmp_path_factory):
+    """The block holds exactly one cached relation, the sized scan, and
+    leaves none behind: not after a normal exit, and not after the
+    block raises."""
+    import os
+
+    from etl_sample_spark.sources.documents import quarantine_corrupt
+
+    base = str(tmp_path_factory.mktemp("cache release"))
+    write_docs(base, BANK_DOCS)
+    with open(os.path.join(base, "BROKEN_bank_scrape.json"), "w") as f:
+        f.write('{"name": "truncated", "accounts": [')
+
+    def persistent():
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    def scan():
+        return read_form(spark, f"{base}/*.json", schemas.BANK_SCRAPE_SCHEMA, corrupt_col="_corrupt_record")
+
+    before = persistent()
+    with quarantine_corrupt(scan()) as (clean, corrupt):
+        assert clean.count() == len(BANK_DOCS)
+        assert corrupt.count() == 1
+        assert persistent() == before + 1
+    assert persistent() == before
+
+    with pytest.raises(RuntimeError, match="inside the block"):
+        with quarantine_corrupt(scan()) as (clean, _corrupt):
+            clean.count()
+            assert persistent() == before + 1
+            raise RuntimeError("inside the block")
+    assert persistent() == before
 
 
 def test_coalesce_by_bytes_keeps_partitions_of_unknown_size(spark, mixed_dir):

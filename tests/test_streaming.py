@@ -607,15 +607,18 @@ def test_ingest_jdbc_recovers_partial_partition_commit(spark, tmp_path):
     assert _read("transactions").count() == 3
 
 
-def test_streaming_dead_letter_quarantine(spark, tmp_path):
+@pytest.mark.parametrize("with_dead_letters", [True, False], ids=["dead_letter_dir", "no_dead_letter_dir"])
+def test_streaming_dead_letter_quarantine(spark, tmp_path, with_dead_letters):
     """Malformed documents must NOT flow into the star schema as
-    all-null rows: with a corrupt-col stream + dead_letter_dir, clean
-    docs normalize, corrupt payloads land raw in the dead-letter table,
-    and exactly-once still holds across a second drain."""
+    all-null rows: with a corrupt-col stream, clean docs normalize and
+    the corrupt payload never reaches a table — it lands raw in the
+    dead-letter table when there is one, and is dropped otherwise (as
+    in run_batch_pipeline). Exactly-once still holds across a second
+    drain."""
     src = str(tmp_path / "in")
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    dlq = str(tmp_path / "dead")
+    dlq = str(tmp_path / "dead") if with_dead_letters else None
     first_two = {k: BANK_DOCS[k] for k in list(BANK_DOCS)[:2]}
     write_docs(src, first_two)
     with open(os.path.join(src, "BROKEN01_bank_scrape.json"), "w") as f:
@@ -629,9 +632,13 @@ def test_streaming_dead_letter_quarantine(spark, tmp_path):
     info = spark.read.parquet(os.path.join(out, "bank_scrape_info"))
     assert info.count() == 2  # corrupt doc NOT normalized
     assert info.where(F.col("name").isNull()).count() == 0
-    dead = spark.read.parquet(dlq).collect()
-    assert len(dead) == 1
-    assert "unquoted-garbage" in dead[0]["raw"]
+    assert "_corrupt_record" not in info.columns
+    if with_dead_letters:
+        dead = spark.read.parquet(dlq).collect()
+        assert len(dead) == 1
+        assert "unquoted-garbage" in dead[0]["raw"]
+    else:
+        assert sorted(os.listdir(tmp_path)) == ["ckpt", "in", "out"]
 
     # second drain with the same checkpoint: nothing re-processed
     stream = stream_documents(
@@ -639,7 +646,8 @@ def test_streaming_dead_letter_quarantine(spark, tmp_path):
     )
     _await(run_ingest_available_now(stream, bank_form_specs(), out, ckpt, dead_letter_dir=dlq))
     assert spark.read.parquet(os.path.join(out, "bank_scrape_info")).count() == 2
-    assert spark.read.parquet(dlq).count() == 1
+    if with_dead_letters:
+        assert spark.read.parquet(dlq).count() == 1
 
 
 def test_stateful_ewma_matches_batch_fold_across_batches(spark, tmp_path):
@@ -1535,14 +1543,16 @@ def test_foreach_batch_normalize_next_batch_compiles_nothing(spark, tmp_path):
         assert sorted(rows[0]) == sorted(rows[1]), t
 
 
-def test_jdbc_fanout_quarantines_corrupt_docs(spark, tmp_path):
+@pytest.mark.parametrize("with_dead_letters", [True, False], ids=["dead_letter_dir", "no_dead_letter_dir"])
+def test_jdbc_fanout_quarantines_corrupt_docs(spark, tmp_path, with_dead_letters):
     """r11 review regression: the JDBC fan-out previously had NO corrupt
     handling — malformed docs became all-null SQL rows with the raw
-    corrupt text as a column. With dead_letter_dir, corrupt payloads
-    land raw in the quarantine and only clean rows reach the DB."""
+    corrupt text as a column. Only clean rows reach the DB; corrupt
+    payloads land raw in the quarantine when there is a dead_letter_dir,
+    and are dropped without one."""
     from etl_sample_spark.streaming.ingest import run_ingest_available_now_jdbc
 
-    url = "jdbc:derby:memory:dlqdb;create=true"
+    url = f"jdbc:derby:memory:dlqdb_{with_dead_letters};create=true"
     opts = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
 
     def _read(table):
@@ -1553,7 +1563,7 @@ def test_jdbc_fanout_quarantines_corrupt_docs(spark, tmp_path):
 
     src = str(tmp_path / "in")
     ckpt = str(tmp_path / "ckpt")
-    dlq = str(tmp_path / "dead")
+    dlq = str(tmp_path / "dead") if with_dead_letters else None
     write_docs(src, {k: BANK_DOCS[k] for k in list(BANK_DOCS)[:2]})
     with open(os.path.join(src, "BROKEN01_bank_scrape.json"), "w") as f:
         f.write('{"name": "broken", "accounts": [unquoted-garbage')
@@ -1571,9 +1581,12 @@ def test_jdbc_fanout_quarantines_corrupt_docs(spark, tmp_path):
     assert info.count() == 2  # corrupt doc NOT written to SQL
     assert "_CORRUPT_RECORD" not in [c.upper() for c in info.columns]
     assert info.where(F.col("name").isNull()).count() == 0
-    dead = spark.read.parquet(dlq).collect()
-    assert len(dead) == 1
-    assert "unquoted-garbage" in dead[0]["raw"]
+    if with_dead_letters:
+        dead = spark.read.parquet(dlq).collect()
+        assert len(dead) == 1
+        assert "unquoted-garbage" in dead[0]["raw"]
+    else:
+        assert sorted(os.listdir(tmp_path)) == ["ckpt", "in"]
 
 
 def test_with_row_identity_distinguishes_microsecond_timestamps(spark):
