@@ -32,12 +32,6 @@ def count_exchanges(df: DataFrame) -> int:
     return len(re.findall(r"(?<!Broadcast)Exchange ", final))
 
 
-def count_broadcasts(df: DataFrame) -> int:
-    plan = executed_plan(df)
-    final = plan.split("== Initial Plan ==")[0]
-    return len(re.findall(r"BroadcastExchange", final))
-
-
 def _walk_executed_nodes(node):
     """Yield every physical node in an executed plan tree, descending
     through the AQE wrappers (AdaptiveSparkPlanExec holds the final plan;

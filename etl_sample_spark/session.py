@@ -44,15 +44,6 @@ def get_spark(app_name: str = "etl-sample-spark") -> SparkSession:
     builder = (
         SparkSession.builder.master(f"local[{_cpus()}]")
         .appName(app_name)
-        # Adaptive execution: runtime shuffle-partition coalescing, skew-join
-        # splitting, and dynamic join-strategy switching. Essential at 100 TB,
-        # harmless at sf0.001.
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.cbo.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
-        .config("spark.sql.session.timeZone", "UTC")
         # Arrow for any pandas_udf / toPandas path (vectorized transfer).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
@@ -101,6 +92,9 @@ def tune(spark: SparkSession) -> SparkSession:
     # Driver testdata stores events.ts as TIMESTAMP(NANOS); Spark has no
     # nanosecond timestamp type — read as long, catalog.table converts.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # Adaptive execution: runtime shuffle-partition coalescing, skew-join
+    # splitting, and dynamic join-strategy switching. Essential at 100 TB,
+    # harmless at sf0.001.
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     # Cost-based optimizer: lets ANALYZE TABLE statistics (row counts,
     # NDVs) drive join reordering and broadcast selection. No-op for

@@ -1,11 +1,9 @@
-"""Shared test fixtures: one SparkSession per test session, a DuckDB
+"""Shared test fixtures: one SparkSession per test session and a DuckDB
 connection with the testdata views pre-registered (mirroring the driver's
-oracle setup), and a cross-engine comparison helper."""
+oracle setup). The cross-engine comparison lives in tools/driver_sim.py."""
 
 from __future__ import annotations
 
-import datetime
-import math
 import os
 import sys
 
@@ -55,7 +53,7 @@ _enable_vendored_protobuf()
 # --------------------------------------------------------------------------
 
 from etl_sample_spark import get_spark
-from etl_sample_spark.catalog import TABLES
+from tools.driver_sim import duck_views
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -74,133 +72,9 @@ def sf_dir() -> str:
 
 @pytest.fixture(scope="session")
 def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+    con = duck_views(duckdb.connect(), SF_DIR)
     yield con
     con.close()
-
-
-def _norm_value(v):
-    if v is None:
-        return "<null>"
-    if isinstance(v, bool):
-        return str(v).lower()
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "<nan>"
-        return f"{round(v, 9):.9f}"
-    if isinstance(v, (datetime.datetime, datetime.date)):
-        return v.isoformat()
-    try:  # Decimal → float path
-        import decimal
-
-        if isinstance(v, decimal.Decimal):
-            return f"{round(float(v), 9):.9f}"
-    except ImportError:
-        pass
-    return str(v)
-
-
-def normalize_result(columns, rows):
-    """Order-insensitive, column-name-sorted normalization — a local stand-in
-    for the driver's value-hash comparison."""
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
-    cols_sorted = [columns[i] for i in order]
-    normed = sorted(tuple(_norm_value(r[i]) for i in order) for r in rows)
-    return cols_sorted, normed
-
-
-def assert_driver_canonicalizable(spark_df, rows=None):
-    """Registry-wide OUTPUT-contract guard (r6 VERDICT item 3).
-
-    The driver canonicalizes query results through a plain pandas
-    sort_values/hash pass: complex-typed cells (array/map/struct) are
-    unhashable there, and timestamps outside pandas' ns range
-    (1677-09-21 .. 2262-04-11) overflow — either one records `err` for
-    a value-correct query. Four r6 queries hit exactly this; the guard
-    makes the class unrepresentable going forward.
-    """
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    complex_cols = [
-        f.name
-        for f in spark_df.schema.fields
-        if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType))
-    ]
-    assert not complex_cols, (
-        f"driver-uncanonicalizable complex columns {complex_cols}: emit "
-        "array_join/to_json scalars instead (plans/relational.py:523 pattern)"
-    )
-    if rows is None:
-        rows = [tuple(r) for r in spark_df.collect()]
-    lo = pd.Timestamp.min.ceil("us").to_pydatetime().replace(tzinfo=None)
-    hi = pd.Timestamp.max.floor("us").to_pydatetime().replace(tzinfo=None)
-    for r in rows:
-        for v in r:
-            if isinstance(v, datetime.datetime):
-                naive = v.replace(tzinfo=None)
-                assert lo <= naive <= hi, (
-                    f"timestamp {v} outside pandas ns range — the driver's "
-                    "canonicalizer overflows; emit a formatted string"
-                )
-            elif isinstance(v, datetime.date):
-                assert 1678 <= v.year <= 2261, (
-                    f"date {v} outside pandas ns range — the driver's "
-                    "canonicalizer overflows; emit a formatted string"
-                )
-    return rows
-
-
-def _spark_type_category(dt) -> str:
-    """Bucket a Spark SQL type into the categories the driver's pandas
-    hash distinguishes. Decimal vs double is the class that produced the
-    r7 `funnel_conversion_steps` driver FAIL while the (previously
-    Decimal→float-coercing) local twin stayed green — so the categories
-    must be compared, not coerced away (r7 VERDICT item 3). Decimal is
-    PRECISION-EXACT, not a category: r8's yoy_monthly_revenue failed the
-    driver hash with value-identical rows because Spark sums
-    DECIMAL(18,2) to decimal(28,2) while DuckDB sums to DECIMAL(38,2) —
-    so raw decimal outputs are banned driver-facing (cast to DOUBLE,
-    oracle via VARCHAR round-trip, q1 precedent)."""
-    from pyspark.sql import types as T
-
-    if isinstance(dt, T.DecimalType):
-        return f"decimal({dt.precision},{dt.scale})"
-    if isinstance(dt, (T.DoubleType, T.FloatType)):
-        return "float"
-    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-        return "int"
-    if isinstance(dt, T.BooleanType):
-        return "bool"
-    if isinstance(dt, T.TimestampType):
-        return "timestamp"
-    if isinstance(dt, T.DateType):
-        return "date"
-    if isinstance(dt, T.StringType):
-        return "string"
-    return type(dt).__name__
-
-
-def _duck_type_category(type_str: str) -> str:
-    t = type_str.upper()
-    if t.startswith("DECIMAL"):
-        return "decimal" + t[len("DECIMAL"):].replace(" ", "")
-    if t in ("DOUBLE", "FLOAT", "REAL"):
-        return "float"
-    if t in ("TINYINT", "SMALLINT", "INTEGER", "BIGINT", "HUGEINT",
-             "UTINYINT", "USMALLINT", "UINTEGER", "UBIGINT"):
-        return "int"
-    if t == "BOOLEAN":
-        return "bool"
-    if t.startswith("TIMESTAMP"):
-        return "timestamp"
-    if t == "DATE":
-        return "date"
-    if t == "VARCHAR":
-        return "string"
-    return t
 
 
 def simple_plan(df) -> str:
@@ -214,57 +88,3 @@ def simple_plan(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain()
     return buf.getvalue()
-
-
-def assert_matches_oracle(spark_df, duck_con, sql):
-    """Compare a Spark DataFrame against DuckDB output the way the driver
-    does: row count, sorted column names, per-column type CATEGORY
-    (decimal/float/int/bool/string/date/timestamp), order-insensitive
-    values."""
-    spark_cols = spark_df.columns
-    spark_rows = assert_driver_canonicalizable(spark_df)
-    rel = duck_con.sql(sql)
-    duck_cols = list(rel.columns)
-    duck_rows = rel.fetchall()
-
-    assert sorted(spark_cols) == sorted(duck_cols), (
-        f"column mismatch: spark={sorted(spark_cols)} duck={sorted(duck_cols)}"
-    )
-    s_cats = {f.name: _spark_type_category(f.dataType) for f in spark_df.schema.fields}
-    d_cats = {c: _duck_type_category(str(t)) for c, t in zip(duck_cols, rel.types)}
-    # Mirror tools/driver_sim.py's ban: raw DECIMAL outputs are driver-hash
-    # hazards even when both engines' precisions happen to agree locally
-    # (Spark widens sums to decimal(28,2) while DuckDB picks decimal(38,2),
-    # and Decimal objects stringify differently from float64). Emit DOUBLE
-    # (oracle side via CAST(CAST(... AS VARCHAR) AS DOUBLE)).
-    decs = [c for c, v in s_cats.items() if v.startswith("decimal")]
-    assert not decs, (
-        f"raw decimal output column(s) {decs}: banned driver-facing — "
-        "cast to DOUBLE on the Spark side and via VARCHAR on the oracle side"
-    )
-    # Width-exact integer ban (r10's ks_two_sample red row): DuckDB SUMs
-    # of ints widen to HUGEINT, which the driver hash distinguishes from
-    # Spark's BIGINT even when values and type CATEGORIES agree.
-    wide = [c for c, t in zip(duck_cols, rel.types)
-            if str(t).upper() in ("HUGEINT", "UBIGINT")]
-    assert not wide, (
-        f"oracle emits 128-bit/unsigned int column(s) {wide}: "
-        "CAST(... AS BIGINT) in the oracle SQL"
-    )
-    cat_mismatch = {
-        c: (s_cats[c], d_cats[c]) for c in s_cats if s_cats[c] != d_cats.get(c)
-    }
-    assert not cat_mismatch, (
-        f"type-category mismatch (spark, duck): {cat_mismatch} — the driver's "
-        "hash is type-sensitive; align the Spark output type with the oracle "
-        "(e.g. CAST(... AS DOUBLE) instead of DECIMAL literals)"
-    )
-    assert len(spark_rows) == len(duck_rows), (
-        f"row count mismatch: spark={len(spark_rows)} duck={len(duck_rows)}"
-    )
-    _, s_norm = normalize_result(spark_cols, spark_rows)
-    _, d_norm = normalize_result(duck_cols, duck_rows)
-    mismatches = [
-        (i, a, b) for i, (a, b) in enumerate(zip(s_norm, d_norm)) if a != b
-    ]
-    assert not mismatches, f"value mismatch (first 5): {mismatches[:5]}"

@@ -1031,7 +1031,7 @@ def test_decile_and_rrf_null_edges_match_oracle(spark, tmp_path):
     (both engines order DESC nulls LAST)."""
     import duckdb as _duckdb
 
-    from tests.conftest import assert_matches_oracle
+    from tools.driver_sim import assert_matches_oracle
 
     words = ["alpha", "beta", "gamma", "delta", "the", "of", "query"]
     rows = []
@@ -1063,7 +1063,7 @@ def test_decile_and_rrf_null_edges_match_oracle(spark, tmp_path):
     try:
         for name in ("classifier_decile_lift", "hybrid_rrf_rerank"):
             spec = REGISTRY[name]
-            assert_matches_oracle(spec.spark(spark, doc_dir), con, spec.oracle)
+            assert_matches_oracle(spec.spark(spark, doc_dir), con.sql(spec.oracle))
     finally:
         con.close()
     # the null-score doc must still be counted (DESC nulls-last on both

@@ -1,13 +1,24 @@
-"""Generate PLANS.md: final (post-AQE) physical plans of the flagship
-queries at sf0.001 with the shape commentary the plan audit checks.
-Regenerate with: python tools/dump_plans.py"""
+"""Dump formatted physical plans of registered queries.
+
+Usage:
+    python tools/dump_plans.py                           # regenerate PLANS.md
+    python tools/dump_plans.py <round> <tag> [query ...]
+
+With no arguments, writes PLANS.md: the flagship queries' plans at
+sf0.001 with the shape commentary the plan audit checks. With a round
+and a tag, writes plans/r<round>/<query>_<tag>.txt (the before/after
+evidence for an optimization round) for the named queries, or the bench
+HEADLINE set, at $SPARK_GRAFT_SF_DIR (default sf0.1, the bench tier, so
+broadcast decisions match what the bench measures).
+"""
 
 from __future__ import annotations
 
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 FLAGSHIP = [
     (
@@ -82,12 +93,34 @@ FLAGSHIP = [
 
 
 def main() -> None:
+    args = sys.argv[1:]
+    if len(args) == 1:
+        print(__doc__.strip(), file=sys.stderr)
+        raise SystemExit(2)
+
     from etl_sample_spark import get_spark
+    from etl_sample_spark.catalog import DEFAULT_SF_DIR
     from etl_sample_spark.plans import REGISTRY
     from etl_sample_spark.plans.inspect import formatted_plan
 
     spark = get_spark("plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
+    if args:
+        rnd, tag, names = args[0], args[1], args[2:]
+        if not names:
+            from bench import HEADLINE
+
+            names = [n for n in HEADLINE if n != "streaming_ingest_available_now"]
+        out_dir = os.path.join(ROOT, "plans", f"r{rnd}")
+        os.makedirs(out_dir, exist_ok=True)
+        for name in names:
+            plan = formatted_plan(REGISTRY[name].spark(spark, DEFAULT_SF_DIR))
+            path = os.path.join(out_dir, f"{name}_{tag}.txt")
+            with open(path, "w") as f:
+                f.write(f"== {name} @ {DEFAULT_SF_DIR} ({tag}) ==\n\n{plan}")
+            print(f"wrote {path} ({len(plan)} chars)", file=sys.stderr)
+        return
+
     sf_dir = "/root/testdata/sf0.001"
     out = [
         "# PLANS — flagship physical plans (generated by tools/dump_plans.py)",
@@ -103,7 +136,7 @@ def main() -> None:
         df = REGISTRY[name].spark(spark, sf_dir)
         plan = formatted_plan(df)
         out.append(f"## {name}\n\n{note}\n\n```\n{plan.strip()}\n```\n")
-    with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
 
